@@ -8,9 +8,12 @@ calls — no cluster work, safe at any scale.
 
 from __future__ import annotations
 
+import json
 import threading
+import uuid
+from typing import Callable
 
-
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Row, SparkSession
 
 from .column import Column
@@ -18,6 +21,35 @@ from .errors import CompilationError, DatabaseError
 from .relation import Relation, RelationType
 
 MAX_COLUMNS = 10_000  # reference: macros/adapters.sql:12-19
+
+
+def properties_clause(properties: dict | None) -> str:
+    """A25 — WITH (k = v) -> TBLPROPERTIES (reference: macros/adapters.sql:81-90)."""
+    if not properties:
+        return ""
+    esc = lambda s: str(s).replace("'", "''")  # noqa: E731
+    kv = ", ".join(
+        f"'{esc(k)}' = '{esc(v)}'" for k, v in properties.items()
+    )
+    return f" TBLPROPERTIES ({kv})"
+
+
+def table_clauses(file_format: str = "parquet", comment: str | None = None,
+                  partition_by: list[str] | None = None,
+                  bucket_by: list[str] | None = None, buckets: int = 0,
+                  properties: dict | None = None) -> str:
+    """The CREATE TABLE clauses that follow the column list: USING,
+    COMMENT, PARTITIONED BY, CLUSTERED BY ... INTO n BUCKETS and
+    TBLPROPERTIES."""
+    names = lambda cols: ", ".join(f"`{c}`" for c in cols)  # noqa: E731
+    out = f" USING {file_format.lower()}"
+    if comment:
+        out += " COMMENT '%s'" % comment.replace("'", "''")
+    if partition_by:
+        out += f" PARTITIONED BY ({names(partition_by)})"
+    if bucket_by and buckets:
+        out += f" CLUSTERED BY ({names(bucket_by)}) INTO {int(buckets)} BUCKETS"
+    return out + properties_clause(properties)
 
 
 class CatalogClient:
@@ -120,37 +152,97 @@ class CatalogClient:
         if existing.is_view:
             sql_text = self.view_definitions.get(fkey)
             if sql_text is None:
-                sql_text = self._view_text_from_catalog(from_relation)
+                # the stored body verbatim -- unlike scanning SHOW CREATE
+                # TABLE for ' AS ', not fooled by a trailing column alias
+                sql_text = self.describe_table(from_relation)["view_text"]
             self.spark.sql(f"DROP VIEW IF EXISTS {from_relation.render()}")
             self.spark.sql(
                 f"CREATE OR REPLACE VIEW {to_relation.render()} AS {sql_text}"
             )
         else:
+            partitioned = bool(
+                (self.describe_table(from_relation) or {}).get(
+                    "partition_columns"))
             self.spark.sql(
                 f"ALTER TABLE {from_relation.render()} RENAME TO {to_relation.render()}"
             )
+            if partitioned:  # re-point partitions: see swap_in
+                self.spark.sql(
+                    f"MSCK REPAIR TABLE {to_relation.render()} SYNC PARTITIONS")
         with self._lock:
             for reg in (self.mv_definitions, self.view_definitions, self.grants):
                 if fkey in reg:
                     reg[tkey] = reg.pop(fkey)
 
-    def _view_text_from_catalog(self, relation: Relation) -> str:
-        # DESCRIBE EXTENDED exposes the stored view body verbatim ("View
-        # Text" row) — unlike scanning SHOW CREATE TABLE for ' AS ', this
-        # cannot be fooled by a definition that itself ends in a column
-        # alias (SELECT a AS b FROM t).
-        for r in self.spark.sql(
-            f"DESCRIBE TABLE EXTENDED {relation.render()}"
-        ).collect():
-            if (r.col_name or "").strip() == "View Text":
-                return r.data_type
-        # fallback: first top-level AS after the CREATE VIEW header
-        row = self.spark.sql(f"SHOW CREATE TABLE {relation.render()}").collect()[0]
-        text = row[0]
-        idx = text.upper().find(" AS ")
-        if idx == -1:
-            raise DatabaseError(f"Cannot extract view text for {relation}")
-        return text[idx + 4:]
+    def swap_in(self, target: Relation,
+                create_stage: Callable[[Relation], object]) -> None:
+        """The stage-and-swap commit every table rebuild goes through
+        (reference: table.sql:12-48, rename mode): readers see the old rows
+        or the new ones, never a missing or empty table.
+
+        ``create_stage(stage)`` builds ``<target>__stg_<hex>``; the target
+        is renamed to ``<target>__bak_<hex>`` (a view occupant, which cannot
+        be renamed, is dropped instead), the stage into place, and the
+        backup is dropped.
+
+        ``ALTER TABLE ... RENAME`` moves a managed table's directory but not
+        its partition locations, so partitions are re-pointed after each
+        rename of a partitioned table. The backup's still point into the
+        target directory, which the stage is about to occupy: ``MSCK ...
+        DROP PARTITIONS`` unregisters them (keeping the files) while that
+        directory is vacant, so dropping the backup deletes only the
+        backup's own directory. The new target's are re-read from its
+        directory with ``MSCK ... SYNC PARTITIONS``.
+
+        On failure the renames are undone newest first (each renamed-back
+        table re-synced) and the stage is dropped, so the target keeps its
+        old rows. A failed backup drop propagates after the commit and
+        leaves the backup behind."""
+        token = uuid.uuid4().hex[:8]
+        stage = target.with_identifier(f"{target.identifier}__stg_{token}")
+        backup = target.with_identifier(f"{target.identifier}__bak_{token}")
+        undo = [lambda: self.spark.sql(
+            f"DROP TABLE IF EXISTS {stage.render()}")]
+
+        def move(src: Relation, dst: Relation, repair: str | None) -> None:
+            self.spark.sql(f"ALTER TABLE {src.render()} RENAME TO {dst.render()}")
+            undo.append(lambda: move(dst, src, repair and "SYNC"))
+            if repair:
+                self.spark.sql(
+                    f"MSCK REPAIR TABLE {dst.render()} {repair} PARTITIONS")
+
+        def partitioned(desc: dict | None) -> bool:
+            return bool((desc or {}).get("partition_columns"))
+
+        try:
+            create_stage(stage)
+            old = self.describe_table(target)
+            if old is not None and old.get("type") == "VIEW":
+                self.drop_relation(target.incorporate(RelationType.View))
+                old = None
+            if old is not None:
+                move(target, backup, "DROP" if partitioned(old) else None)
+            move(stage, target,
+                 "SYNC" if partitioned(self.describe_table(stage)) else None)
+        except BaseException:
+            for step in reversed(list(undo)):
+                step()
+            raise
+        if old is not None:
+            self.spark.sql(f"DROP TABLE {backup.render()}")
+
+    def describe_table(self, relation: Relation) -> dict | None:
+        """``DESCRIBE TABLE EXTENDED ... AS JSON`` (catalog metadata, no
+        Spark job): type, provider, partition and bucket columns, comment,
+        table properties. None when the relation does not exist."""
+        try:
+            row = self.spark.sql(
+                f"DESCRIBE TABLE EXTENDED {relation.render()} AS JSON").first()
+        except AnalysisException as exc:
+            if "NOT_FOUND" in (exc.getCondition() or ""):
+                return None
+            raise
+        return json.loads(row[0])
 
     # -- columns (A14, A21, A22) ----------------------------------------------
     def get_columns_in_relation(self, relation: Relation) -> list[Column]:
@@ -189,7 +281,7 @@ class CatalogClient:
         current = [c.name for c in self.get_columns_in_relation(relation)
                    if c.name.lower() not in drop]
         select = ", ".join(f"`{c}`" for c in current)
-        self._rewrite(relation, f"SELECT {select} FROM {relation.render()}")
+        self.rewrite_table(relation, f"SELECT {select} FROM {relation.render()}")
 
     def alter_column_type(self, relation: Relation, column_name: str,
                           new_column_type: str) -> None:
@@ -214,7 +306,9 @@ class CatalogClient:
                 else:
                     decls.append(f"`{c.name}` {c.data_type}")
                     selects.append(f"`{c.name}`")
-            self._rewrite_typed(relation, decls, selects)
+            self.rewrite_table(
+                relation,
+                f"SELECT {', '.join(selects)} FROM {relation.render()}", decls)
             return
         parts = []
         for c in cols:
@@ -222,7 +316,8 @@ class CatalogClient:
                 parts.append(f"CAST(`{c.name}` AS {new_column_type}) AS `{c.name}`")
             else:
                 parts.append(f"`{c.name}`")
-        self._rewrite(relation, f"SELECT {', '.join(parts)} FROM {relation.render()}")
+        self.rewrite_table(
+            relation, f"SELECT {', '.join(parts)} FROM {relation.render()}")
 
     def expand_target_column_types(self, from_relation: Relation,
                                    to_relation: Relation) -> None:
@@ -254,39 +349,32 @@ class CatalogClient:
                     f"decimal({max(sp, tp)},{max(ss, ts)})",
                 )
 
-    def _rewrite(self, relation: Relation, select_sql: str) -> None:
-        """Stage-and-swap rewrite (same commit protocol as the table
-        materialization's rename mode, reference: table.sql:12-48)."""
-        tmp = relation.with_identifier(relation.identifier + "__dbt_alter_tmp")
-        backup = relation.with_identifier(relation.identifier + "__dbt_alter_bak")
-        self.spark.sql(f"DROP TABLE IF EXISTS {tmp.render()}")
-        self.spark.sql(f"DROP TABLE IF EXISTS {backup.render()}")
-        self.spark.sql(
-            f"CREATE TABLE {tmp.render()} USING PARQUET AS {select_sql}"
-        )
-        self.spark.sql(f"ALTER TABLE {relation.render()} RENAME TO {backup.render()}")
-        self.spark.sql(f"ALTER TABLE {tmp.render()} RENAME TO {relation.render()}")
-        self.spark.sql(f"DROP TABLE IF EXISTS {backup.render()}")
+    def rewrite_table(self, relation: Relation, select_sql: str,
+                      decls: list[str] | None = None) -> None:
+        """Replace ``relation`` with ``select_sql``'s rows through
+        :meth:`swap_in`, keeping its provider, partitioning, buckets,
+        comment and table properties. ``decls`` declares the new column
+        list explicitly -- required when it carries char/varchar lengths,
+        which a CTAS of a CAST would silently erase (Spark
+        CharVarcharUtils)."""
+        d = self.describe_table(relation) or {}
+        clauses = table_clauses(
+            d.get("provider") or "parquet", d.get("comment"),
+            d.get("partition_columns"), d.get("bucket_columns"),
+            d.get("num_buckets", 0), d.get("table_properties"))
 
-    def _rewrite_typed(self, relation: Relation, decls: list[str],
-                       selects: list[str]) -> None:
-        """Stage-and-swap rewrite with an EXPLICITLY declared schema —
-        required when the new schema carries char/varchar lengths, which a
-        CTAS of a CAST would silently erase (Spark CharVarcharUtils)."""
-        tmp = relation.with_identifier(relation.identifier + "__dbt_alter_tmp")
-        backup = relation.with_identifier(relation.identifier + "__dbt_alter_bak")
-        self.spark.sql(f"DROP TABLE IF EXISTS {tmp.render()}")
-        self.spark.sql(f"DROP TABLE IF EXISTS {backup.render()}")
-        self.spark.sql(
-            f"CREATE TABLE {tmp.render()} ({', '.join(decls)}) USING PARQUET"
-        )
-        self.spark.sql(
-            f"INSERT INTO {tmp.render()} "
-            f"SELECT {', '.join(selects)} FROM {relation.render()}"
-        )
-        self.spark.sql(f"ALTER TABLE {relation.render()} RENAME TO {backup.render()}")
-        self.spark.sql(f"ALTER TABLE {tmp.render()} RENAME TO {relation.render()}")
-        self.spark.sql(f"DROP TABLE IF EXISTS {backup.render()}")
+        def create_stage(stage: Relation) -> None:
+            if decls is None:
+                self.spark.sql(
+                    f"CREATE TABLE {stage.render()}{clauses} AS {select_sql}")
+                return
+            # DESCRIBE order is the physical order (partition columns
+            # last), so the positional INSERT lines up with ``decls``
+            self.spark.sql(
+                f"CREATE TABLE {stage.render()} ({', '.join(decls)}){clauses}")
+            self.spark.sql(f"INSERT INTO {stage.render()} {select_sql}")
+
+        self.swap_in(relation, create_stage)
 
     # -- comments (A23) --------------------------------------------------------
     def persist_relation_docs(self, relation: Relation, comment: str) -> None:
@@ -322,19 +410,9 @@ class CatalogClient:
                 )
 
     def get_relation_comment(self, relation: Relation) -> str | None:
-        rows = self.spark.sql(
-            f"DESCRIBE TABLE EXTENDED {relation.render()}"
-        ).collect()
-        for r in rows:
-            if r.col_name == "Comment":
-                return r.data_type
-        for r in rows:
-            if r.col_name == "Table Properties" and "comment=" in (r.data_type or ""):
-                props = r.data_type.strip("[]")
-                for kv in props.split(","):
-                    if kv.strip().startswith("comment="):
-                        return kv.strip()[len("comment="):]
-        return None
+        d = self.describe_table(relation) or {}
+        return d.get("comment") or (d.get("table_properties") or {}).get(
+            "comment")
 
     # -- grants (A24) -----------------------------------------------------------
     def show_grants(self, relation: Relation) -> dict[str, set[str]]:

@@ -24,6 +24,7 @@ import os
 import shutil
 import tempfile
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -264,40 +265,22 @@ class Engine:
     # ------------------------------------------------------------------
     # commit protocol
     # ------------------------------------------------------------------
-    def _table_format(self, relation: Relation) -> str:
-        """Datasource format of an existing table (DESCRIBE EXTENDED
-        Provider row); parquet when undetectable."""
-        try:
-            for r in self.spark.sql(
-                f"DESCRIBE TABLE EXTENDED {relation.render()}"
-            ).collect():
-                if r.col_name == "Provider":
-                    return (r.data_type or "parquet").lower()
-        except Exception:
-            pass
-        return "parquet"
+    def swap_in(self, target: Relation,
+                create_stage: Callable[[Relation], object]) -> None:
+        """Commit a rebuild of ``target``: ``create_stage(stage)`` builds the
+        new table under a staging name, which then replaces the target by
+        rename (:meth:`CatalogClient.swap_in`)."""
+        self.catalog.swap_in(target, create_stage)
 
     def overwrite_table_atomic(self, relation: Relation, df: DataFrame) -> None:
-        """Stage df as a new table, swap via renames, drop backup. The write
-        (the expensive part) happens before the old table disappears; readers
-        never observe a missing relation (reference: table.sql:12-48). The
-        staged table keeps the target's datasource format."""
-        token = uuid.uuid4().hex[:8]
-        tmp = relation.with_identifier(f"{relation.identifier}__stg_{token}")
-        backup = relation.with_identifier(f"{relation.identifier}__bak_{token}")
-        df.write.format(self._table_format(relation)).saveAsTable(
-            tmp.render_unquoted())
+        """Replace ``relation``'s rows with ``df`` through :meth:`swap_in`,
+        keeping its layout (:meth:`CatalogClient.rewrite_table`)."""
+        view = f"__swap_src_{uuid.uuid4().hex[:8]}"
+        df.createOrReplaceTempView(view)
         try:
-            self.spark.sql(
-                f"ALTER TABLE {relation.render()} RENAME TO {backup.render()}"
-            )
-            self.spark.sql(
-                f"ALTER TABLE {tmp.render()} RENAME TO {relation.render()}"
-            )
-            self.spark.sql(f"DROP TABLE IF EXISTS {backup.render()}")
-        except Exception:
-            self.spark.sql(f"DROP TABLE IF EXISTS {tmp.render()}")
-            raise
+            self.catalog.rewrite_table(relation, f"SELECT * FROM {view}")
+        finally:
+            self.spark.catalog.dropTempView(view)
 
     # ------------------------------------------------------------------
     # execution passthrough

@@ -5,10 +5,14 @@ The reference implements these as Jinja materialization blocks emitting Trino
 DDL/DML (reference: macros/materializations/*.sql, macros/adapters.sql). Here
 each is a Python function against a shared :class:`~..engine.Engine`.
 
-Commit protocol: all destructive writes stage into a ``__dbt_tmp`` table and
-swap via renames — the reference's table 'rename' mode
-(reference: table.sql:12-48) — so there is no window with a missing target
-and a failed build never corrupts the previous version.
+Commit protocol: every rebuild of an existing table goes through
+:meth:`~..engine.Engine.swap_in` -- the reference's table 'rename' mode
+(reference: table.sql:12-48). The new table is built under a staging name,
+renamed into place, and the old one is dropped, so readers never see a
+missing or empty target and a failed build leaves the previous version.
+``swap_in`` repairs partitions after each rename: Spark's rename moves the
+table directory but not the partition locations, and the backup's drop
+would otherwise delete the new table's files.
 """
 
 from __future__ import annotations
@@ -17,6 +21,7 @@ from typing import TYPE_CHECKING
 
 
 
+from ..catalog import properties_clause, table_clauses  # noqa: F401 (re-exported A25 helper)
 from ..errors import CompilationError, DatabaseError
 from ..relation import Relation, RelationType
 from . import merge as merge_ops
@@ -29,17 +34,6 @@ if TYPE_CHECKING:  # pragma: no cover
 # --------------------------------------------------------------------------
 # DDL helpers (A1, A2, A25)
 # --------------------------------------------------------------------------
-
-def properties_clause(properties: dict | None) -> str:
-    """A25 — WITH (k = v) -> TBLPROPERTIES (reference: macros/adapters.sql:81-90)."""
-    if not properties:
-        return ""
-    esc = lambda s: str(s).replace("'", "''")  # noqa: E731
-    kv = ", ".join(
-        f"'{esc(k)}' = '{esc(v)}'" for k, v in properties.items()
-    )
-    return f" TBLPROPERTIES ({kv})"
-
 
 def create_table_as(
     engine: "Engine",
@@ -69,30 +63,17 @@ def create_table_as(
       tight parquet min/max stats on the sort columns, enabling row-group
       skipping for range predicates
     """
-    using = file_format.upper()
     if sort_by:
         cols = ", ".join(f"`{c}`" for c in sort_by)
         sql = f"SELECT * FROM ({sql}) __sorted SORT BY {cols}"
-    layout = ""
-    if partition_by:
-        layout += " PARTITIONED BY (%s)" % ", ".join(
-            f"`{c}`" for c in partition_by
-        )
-    if bucket_by and buckets:
-        layout += " CLUSTERED BY (%s) INTO %d BUCKETS" % (
-            ", ".join(f"`{c}`" for c in bucket_by), int(buckets)
-        )
-    comment_clause = ""
-    if comment:
-        comment_clause = " COMMENT '%s'" % comment.replace("'", "''")
+    clauses = table_clauses(file_format, comment, partition_by, bucket_by,
+                            buckets, properties)
     if contract:
         cols_ddl = ", ".join(
             f"`{c['name']}` {c['data_type']}" for c in contract
         )
         engine.spark.sql(
-            f"CREATE TABLE {relation.render()} ({cols_ddl}) USING {using}"
-            f"{comment_clause}{layout}{properties_clause(properties)}"
-        )
+            f"CREATE TABLE {relation.render()} ({cols_ddl}){clauses}")
         assert_columns_equivalent(engine, relation, sql, contract)
         enforce_not_null(engine, sql, contract)
         # explicit column list: a bare INSERT INTO maps POSITIONALLY
@@ -103,10 +84,7 @@ def create_table_as(
         engine.spark.sql(
             f"INSERT INTO {relation.render()} ({col_list}) {sql}")
     else:
-        engine.spark.sql(
-            f"CREATE TABLE {relation.render()} USING {using}"
-            f"{comment_clause}{layout}{properties_clause(properties)} AS {sql}"
-        )
+        engine.spark.sql(f"CREATE TABLE {relation.render()}{clauses} AS {sql}")
 
 
 def assert_columns_equivalent(engine: "Engine", relation: Relation, sql: str,
@@ -171,8 +149,9 @@ def create_view_as(engine: "Engine", relation: Relation, sql: str,
 # --------------------------------------------------------------------------
 
 def materialize_table(engine: "Engine", model: "Model") -> Relation:
-    """A9 — two modes (reference: table.sql:1-70): 'rename' (default) builds
-    __dbt_tmp, swaps via backup rename (near-atomic); 'drop' drops then CTAS."""
+    """A9 — two modes (reference: table.sql:1-70): 'rename' (default)
+    rebuilds an existing relation through :meth:`Engine.swap_in`; 'drop'
+    drops then CTAS."""
     config = model.config
     mode = config.get("on_table_exists", "rename")
     if mode not in ("rename", "drop"):
@@ -182,41 +161,36 @@ def materialize_table(engine: "Engine", model: "Model") -> Relation:
     target = engine.relation(model.name, RelationType.Table)
     existing = engine.catalog.get_relation(target)
     sql = engine.compile_sql(model)
-    props = config.get("properties")
-    fmt = config.get("file_format", "parquet")
     comment = model.description if config.get("persist_docs") else None
     contract = config.get("contract_columns") if (
         config.get("contract", {}).get("enforced")
     ) else None
 
-    layout = dict(
+    def create(relation: Relation) -> None:
+        create_table_as(engine, relation, sql, comment=comment,
+                        contract=contract, **_config_layout(config))
+
+    if mode == "drop" or existing is None:
+        if existing is not None:
+            engine.catalog.drop_relation(existing)
+        create(target)
+    else:
+        engine.swap_in(target, create)  # rename mode (table.sql:12-48)
+    engine.apply_model_hooks_and_grants(model, target)
+    return target
+
+
+def _config_layout(config: dict) -> dict:
+    """The model config's table layout, as :func:`create_table_as`
+    keyword arguments."""
+    return dict(
+        properties=config.get("properties"),
+        file_format=config.get("file_format", "parquet"),
         partition_by=config.get("partition_by"),
         bucket_by=config.get("bucket_by"),
         buckets=config.get("buckets", 0),
         sort_by=config.get("sort_by"),
     )
-    if mode == "drop" or existing is None:
-        if existing is not None:
-            engine.catalog.drop_relation(existing)
-        create_table_as(engine, target, sql, props, comment, contract, fmt,
-                        **layout)
-    else:
-        # rename mode (reference: table.sql:12-48)
-        tmp = target.with_identifier(target.identifier + "__dbt_tmp")
-        backup = target.with_identifier(target.identifier + "__dbt_backup")
-        engine.catalog.drop_relation(tmp.incorporate(RelationType.Table))
-        engine.catalog.drop_relation(backup.incorporate(existing.type))
-        create_table_as(engine, tmp, sql, props, comment, contract, fmt,
-                        **layout)
-        if existing.is_view:
-            # views can't be renamed nor occupy the name: drop
-            engine.catalog.drop_relation(existing)
-        else:
-            engine.catalog.rename_relation(target.incorporate(existing.type), backup)
-        engine.catalog.rename_relation(tmp, target)
-        engine.catalog.drop_relation(backup)
-    engine.apply_model_hooks_and_grants(model, target)
-    return target
 
 
 # --------------------------------------------------------------------------
@@ -249,20 +223,14 @@ def materialize_view(engine: "Engine", model: "Model",
 # incremental materialization (A5-A8)
 # --------------------------------------------------------------------------
 
-# How materialize_incremental stages the batch before the strategy
-# branches ("checkpoint_bcast" / "persist" / None) — see the comment at
-# the staging site; a module constant so the r17 A/B probe can flip it
-# inside one session. Interleaved A/B (r17, sf0.1, local[32], 2 runs x 4
-# reps): inc_merge_partitioned None 2.56-3.2s / persist 2.44 /
-# checkpoint_bcast 2.18-2.21; inc_merge 1.00 / 1.00 / 0.92.
-_BATCH_STAGING = "checkpoint_bcast"
-# checkpoint_bcast broadcasts the staged batch EXPLICITLY (localCheckpoint
-# strips size statistics, so without the hint the planner degrades every
-# branch to sort-merge joins — the r16 revert). The hint is guarded by a
-# row cap: a batch this size at ~100B-1KB/row stays far under the 8 GB /
-# 512M-row broadcast-relation cap, while a genuinely large batch falls
-# back to persist staging, whose materialized InMemoryRelation gives the
-# planner ACCURATE stats to choose broadcast vs shuffle on its own.
+# The merge strategy stages a view-typed batch once with localCheckpoint
+# and broadcasts it EXPLICITLY: a checkpointed DataFrame carries no size
+# statistics, so without the hint the planner degrades every branch to
+# sort-merge joins. The hint is guarded by a row cap: a batch this size at
+# ~100B-1KB/row stays far under the 8 GB / 512M-row broadcast-relation cap,
+# while a larger batch is persisted instead, whose materialized
+# InMemoryRelation gives the planner accurate stats to choose broadcast vs
+# shuffle on its own.
 _STAGE_BCAST_ROW_CAP = 4_000_000
 
 VALID_STRATEGIES = ("default", "append", "merge", "delete+insert",
@@ -369,47 +337,23 @@ def materialize_incremental(engine: "Engine", model: "Model",
                             engine.catalog.get_columns_in_relation(target)]
 
         predicates = config.get("predicates") or config.get("incremental_predicates")
-        # Stage the batch ONCE (guide §5 caching/lineage): the temp VIEW's
-        # SELECT otherwise re-evaluates on every strategy-branch action —
-        # the duplicate-key probe, each join arm of the merge rewrite, the
-        # partition-scope probes (27 actions on inc_merge_partitioned).
-        # r16 tried localCheckpoint here and REVERTED it: a checkpointed
-        # DataFrame is an ExistingRDD with no size statistics, so the
-        # planner stopped broadcasting the (small) batch and every branch
-        # degraded to a sort-merge join (measured 2.2 -> 5.2s). persist
-        # does not have that failure mode — an eagerly materialized
-        # InMemoryRelation carries ACCURATE post-materialization size
-        # statistics, so the planner still broadcasts a genuinely small
-        # batch and still shuffles a genuinely large one (no forced-
-        # broadcast OOM hazard at scale). Paired unpersist in the finally
-        # below — nothing outlives the operator. _BATCH_STAGING is the
-        # measurement knob: "persist" (default) / "checkpoint_bcast" (the
-        # r16-verdict suggestion: localCheckpoint + explicit broadcast
-        # hint) / None (the pre-r17 re-scan behavior).
+        # Stage the batch once: the temp VIEW's SELECT otherwise re-evaluates
+        # on every strategy-branch action -- the duplicate-key probe, each
+        # join arm of the merge rewrite, the partition-scope probes. Only
+        # the merge strategy re-evaluates a view-typed batch; append and
+        # insert_overwrite evaluate it once and delete+insert already
+        # materializes a tmp TABLE. Paired unpersist in the finally below.
         src_df = engine.spark.table(tmp.render_unquoted())
-        # only the merge strategy re-evaluates a view-typed batch (the
-        # probe + three join arms + scope probes); append/insert_overwrite
-        # evaluate it exactly once and delete+insert already materializes
-        # a tmp TABLE — staging those would only add a copy
-        stage_here = ttype == "view" and strategy == "merge" and unique_key
-        if _BATCH_STAGING == "checkpoint_bcast" and stage_here:
+        if ttype == "view" and strategy == "merge" and unique_key:
             from pyspark.sql import functions as _F
 
             ck = src_df.localCheckpoint(eager=False)
             if ck.count() <= _STAGE_BCAST_ROW_CAP:  # count materializes ck
                 src_df = _F.broadcast(ck)
             else:
-                # large batch: give the planner real stats instead of a
-                # forced broadcast (persist + materialize -> accurate
-                # InMemoryRelation sizeInBytes; broadcast vs shuffle is
-                # its call again)
                 staged = ck.persist()
                 staged.count()
                 src_df = staged
-        elif _BATCH_STAGING == "persist" and stage_here:
-            staged = src_df.persist()
-            staged.count()  # materialize now: one evaluation + real stats
-            src_df = staged
         tgt_df = engine.spark.table(target.render_unquoted())
 
         scoped = bool(partition_by) and all(
@@ -427,16 +371,9 @@ def materialize_incremental(engine: "Engine", model: "Model",
             # the partitions the batch writes rows into; without
             # partition_by, replace the whole table (dbt-spark semantics).
             if scoped:
-                prev = engine.spark.conf.get(
-                    "spark.sql.sources.partitionOverwriteMode", "static")
-                engine.spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", "dynamic")
-                try:
-                    src_df.select(*dest_columns).write.insertInto(
-                        target.render_unquoted(), overwrite=True)
-                finally:
-                    engine.spark.conf.set(
-                        "spark.sql.sources.partitionOverwriteMode", prev)
+                merge_ops.dynamic_overwrite_insert(
+                    engine.spark, target.render_unquoted(),
+                    src_df.select(*dest_columns))
             else:
                 engine.overwrite_table_atomic(
                     target, src_df.select(*dest_columns))
@@ -780,7 +717,7 @@ def materialize_materialized_view(engine: "Engine", model: "Model",
     """A11 — Spark has no MVs; emulate as managed table + stored defining SQL
     (reference: materialized_view.sql:1-35). Any config change forces full
     refresh (materialized_view.sql:24-30); replace uses the same
-    intermediate+rename swap as tables (materialized_view.sql:11-21)."""
+    :meth:`Engine.swap_in` as tables (materialized_view.sql:11-21)."""
     target = engine.relation(model.name, RelationType.MaterializedView)
     key = (target.schema, target.identifier)
     sql = engine.compile_sql(model)
@@ -788,24 +725,14 @@ def materialize_materialized_view(engine: "Engine", model: "Model",
     stored = engine.catalog.mv_definitions.get(key)
     if existing is not None and stored == sql and not full_refresh:
         return target  # no-op, like dbt's 'alter' path with no changes
+
+    def create(relation: Relation) -> None:
+        create_table_as(engine, relation, sql, **_config_layout(model.config))
+
     if existing is not None:
-        # replace via intermediate + rename swap
-        tmp = target.with_identifier(target.identifier + "__dbt_tmp")
-        backup = target.with_identifier(target.identifier + "__dbt_backup")
-        engine.catalog.drop_relation(tmp)
-        engine.catalog.drop_relation(backup)
-        engine.spark.sql(
-            f"CREATE TABLE {tmp.render()} USING PARQUET"
-            f"{properties_clause(model.config.get('properties'))} AS {sql}"
-        )
-        engine.catalog.rename_relation(target.incorporate(RelationType.Table), backup)
-        engine.catalog.rename_relation(tmp, target)
-        engine.catalog.drop_relation(backup)
+        engine.swap_in(target, create)
     else:
-        engine.spark.sql(
-            f"CREATE TABLE {target.render()} USING PARQUET"
-            f"{properties_clause(model.config.get('properties'))} AS {sql}"
-        )
+        create(target)
     engine.catalog.mv_definitions[key] = sql
     engine.apply_model_hooks_and_grants(model, target)
     return target

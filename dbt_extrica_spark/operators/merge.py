@@ -18,6 +18,8 @@ Scale posture:
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, functions as F
 
 from ..errors import DatabaseError
@@ -210,20 +212,28 @@ def delete_insert(
     return kept.unionByName(inserted)
 
 
+# partitionOverwriteMode is one session-wide conf, and the project runner
+# writes models from a thread pool over one session: two unguarded
+# set/write/restore sequences interleave so that one thread's restore of
+# "static" turns the other's partition-scoped write into a full overwrite.
+_DYNAMIC_OVERWRITE_LOCK = threading.Lock()
+
+
 def dynamic_overwrite_insert(spark, table_name: str,
                              df: DataFrame) -> None:
     """The single shared partition-scoped commit primitive: positional
     insertInto under dynamic partitionOverwriteMode, with conf
     save/restore. Every dynamic-overwrite write in the package routes
-    through here (review r10: the save/set/write/restore dance was
-    copy-pasted four times — one helper, one place to fix)."""
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                          "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.insertInto(table_name, overwrite=True)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    through here, serialized by one module lock so concurrent callers
+    never see each other's conf."""
+    with _DYNAMIC_OVERWRITE_LOCK:
+        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
+                              "static")
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try:
+            df.write.insertInto(table_name, overwrite=True)
+        finally:
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
 def partition_scoped_overwrite(

@@ -15,6 +15,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql import functions as F
 
 from ..relation import Relation, RelationType
+from .merge import dynamic_overwrite_insert
 
 if TYPE_CHECKING:  # pragma: no cover
     from ..engine import Engine
@@ -136,16 +137,8 @@ def rollup_cascade(
                 refreshed = engine.spark.sql(_rollup_select(
                     src, src_ts, b, dims, exprs, where=floor))
             tbl_cols = engine.spark.table(target.render_unquoted()).columns
-            prev = engine.spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static")
-            engine.spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                refreshed.select(*tbl_cols).write.insertInto(
-                    target.render_unquoted(), overwrite=True)
-            finally:
-                engine.spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev)
+            dynamic_overwrite_insert(engine.spark, target.render_unquoted(),
+                                     refreshed.select(*tbl_cols))
         rels[name] = target
         src, src_ts, first = target.render(), "bucket", False
     return rels
@@ -199,12 +192,6 @@ def continuous_rollup(
             where=f"`{ts_col}` >= TIMESTAMP '{bound_str} 00:00:00'",
         ))
     tbl_cols = engine.spark.table(target.render_unquoted()).columns
-    prev = engine.spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static")
-    engine.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        refreshed.select(*tbl_cols).write.insertInto(
-            target.render_unquoted(), overwrite=True)
-    finally:
-        engine.spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    dynamic_overwrite_insert(engine.spark, target.render_unquoted(),
+                             refreshed.select(*tbl_cols))
     return target

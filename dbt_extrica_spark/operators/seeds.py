@@ -174,7 +174,7 @@ def seed(
         # the reference emits seed properties in the CTAS WITH(...) clause
         # (TBLPROPERTIES); DataFrameWriter options would be silently ignored
         # by the parquet writer, so set them as real table properties.
-        from .materializations import properties_clause
+        from ..catalog import properties_clause
 
         clause = properties_clause(properties).replace(" TBLPROPERTIES ", "", 1)
         engine.spark.sql(

@@ -28,6 +28,7 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..catalog import table_clauses
 from ..errors import CompilationError
 from ..functions.shims import snapshot_hash_arguments
 from ..relation import Relation, RelationType
@@ -97,15 +98,9 @@ def snapshot(
         initial = _with_meta(src, keys, updated_expr)
         view = f"__snap_init_{uuid.uuid4().hex[:8]}"
         initial.createOrReplaceTempView(view)
-        layout = ""
-        if partition_by:
-            layout = " PARTITIONED BY (%s)" % ", ".join(
-                f"`{c}`" for c in partition_by
-            )
         engine.spark.sql(
-            f"CREATE TABLE {target.render()} USING PARQUET{layout} AS "
-            f"SELECT * FROM {view}"
-        )
+            f"CREATE TABLE {target.render()}"
+            f"{table_clauses(partition_by=partition_by)} AS SELECT * FROM {view}")
         engine.spark.catalog.dropTempView(view)
         return target
 

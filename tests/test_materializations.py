@@ -1196,11 +1196,10 @@ def test_apply_cdc_semantics(spark):
 
 
 def test_merge_batch_staging_variants_identical(engine, monkeypatch):
-    """r17: the merge batch is staged once (localCheckpoint + guarded
-    broadcast hint). The result must be identical across all staging
-    modes — including the large-batch persist fallback (row cap forced
-    to 0) and the pre-r17 re-scan behavior — and the staged cache must
-    not leak past the operator."""
+    """The merge batch is staged once (localCheckpoint + guarded
+    broadcast hint). The result must be identical on both staging paths
+    — including the large-batch persist fallback (row cap forced to 0) —
+    and the staged cache must not leak past the operator."""
     from dbt_extrica_spark.operators import materializations as M
 
     cfg = {"materialized": "incremental", "incremental_strategy": "merge",
@@ -1219,5 +1218,3 @@ def test_merge_batch_staging_variants_identical(engine, monkeypatch):
     assert run("stage_default") == want          # checkpoint_bcast path
     monkeypatch.setattr(M, "_STAGE_BCAST_ROW_CAP", 0)
     assert run("stage_bigbatch") == want         # persist fallback path
-    monkeypatch.setattr(M, "_BATCH_STAGING", None)
-    assert run("stage_none") == want             # pre-r17 re-scan path

@@ -80,6 +80,8 @@ def main() -> None:
     ap.add_argument("replicas", type=int, nargs="?", default=10)
     ap.add_argument("--src", default="/root/testdata/sf0.1")
     args = ap.parse_args()
+    if args.replicas < 1:
+        ap.error("replicas must be >= 1")
 
     from dbt_extrica_spark.session import get_spark
     from dbt_extrica_spark.sources.registry import read_parquet_table
