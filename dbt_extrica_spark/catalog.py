@@ -21,6 +21,7 @@ from .errors import CompilationError, DatabaseError
 from .relation import Relation, RelationType
 
 MAX_COLUMNS = 10_000  # reference: macros/adapters.sql:12-19
+_UNDESCRIBED = object()  # swap_in: describe the target itself
 
 
 def properties_clause(properties: dict | None) -> str:
@@ -175,7 +176,8 @@ class CatalogClient:
                     reg[tkey] = reg.pop(fkey)
 
     def swap_in(self, target: Relation,
-                create_stage: Callable[[Relation], object]) -> None:
+                create_stage: Callable[[Relation], object],
+                old: dict | None | object = _UNDESCRIBED) -> None:
         """The stage-and-swap commit every table rebuild goes through
         (reference: table.sql:12-48, rename mode): readers see the old rows
         or the new ones, never a missing or empty table.
@@ -183,7 +185,8 @@ class CatalogClient:
         ``create_stage(stage)`` builds ``<target>__stg_<hex>``; the target
         is renamed to ``<target>__bak_<hex>`` (a view occupant, which cannot
         be renamed, is dropped instead), the stage into place, and the
-        backup is dropped.
+        backup is dropped. ``old`` is the target's :meth:`describe_table`
+        when the caller already has it (None: no target).
 
         ``ALTER TABLE ... RENAME`` moves a managed table's directory but not
         its partition locations, so partitions are re-pointed after each
@@ -216,7 +219,8 @@ class CatalogClient:
 
         try:
             create_stage(stage)
-            old = self.describe_table(target)
+            if old is _UNDESCRIBED:
+                old = self.describe_table(target)
             if old is not None and old.get("type") == "VIEW":
                 self.drop_relation(target.incorporate(RelationType.View))
                 old = None
@@ -357,7 +361,8 @@ class CatalogClient:
         list explicitly -- required when it carries char/varchar lengths,
         which a CTAS of a CAST would silently erase (Spark
         CharVarcharUtils)."""
-        d = self.describe_table(relation) or {}
+        old = self.describe_table(relation)
+        d = old or {}
         clauses = table_clauses(
             d.get("provider") or "parquet", d.get("comment"),
             d.get("partition_columns"), d.get("bucket_columns"),
@@ -374,7 +379,7 @@ class CatalogClient:
                 f"CREATE TABLE {stage.render()} ({', '.join(decls)}){clauses}")
             self.spark.sql(f"INSERT INTO {stage.render()} {select_sql}")
 
-        self.swap_in(relation, create_stage)
+        self.swap_in(relation, create_stage, old)
 
     # -- comments (A23) --------------------------------------------------------
     def persist_relation_docs(self, relation: Relation, comment: str) -> None:

@@ -284,7 +284,9 @@ class ExecutionManager:
         try:
             return fn(*args, **kwargs)
         finally:
-            self.spark.sparkContext.setJobGroup("", "")
+            # PySpark has no clearJobGroup; the JVM context's one clears the
+            # calling thread's group, description and interrupt flag
+            self.spark.sparkContext._jsc.clearJobGroup()
 
     def cancel(self, group_id: str) -> None:
         self.spark.sparkContext.cancelJobGroup(group_id)

@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..staging import staged
+
 
 def funnel(
     df: DataFrame,
@@ -243,10 +245,8 @@ def pagerank(
     ONCE, and localCheckpointed — each iteration is then one
     (edges x ranks) equi-join on src (ranks is the node-sized small
     side) plus one groupBy(dst) partial-aggregated sum. Lineage is
-    capped per round via localCheckpoint and superseded round
-    checkpoints are freed (the connected_components mechanism)."""
-    from .dedup import release_local_checkpoint
-
+    capped per round via localCheckpoint; superseded rounds and the
+    edge and node checkpoints are released before returning."""
     if not 0 < damping_pct < 100:
         raise ValueError("damping_pct must be in (0, 100)")
     e = edges.select(F.col(src_col).cast("bigint").alias("src"),
@@ -254,43 +254,43 @@ def pagerank(
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull()) \
         .distinct()
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("odeg"))
-    e2 = e.join(outdeg, on="src").localCheckpoint(eager=True)
-    nodes = (e.select(F.col("src").alias("id"))
-             .unionByName(e.select(F.col("dst").alias("id")))
-             .distinct().localCheckpoint(eager=True))
-    # Overflow guard (see docstring): a node's incoming sum is bounded by
-    # the total rank mass <= n_nodes * scale, and the update computes the
-    # intermediate product damping_pct * inc BEFORE the //100 — so the
-    # binding constraint is n_nodes * scale * damping_pct <= 2^63-1.
-    # Past it, Spark's BIGINT arithmetic either wraps silently (non-ANSI
-    # sum) or aborts mid-job (ANSI multiply) — raise up front instead.
-    # The count is metadata-sized (nodes is already checkpointed).
-    n_nodes = nodes.count()
-    if n_nodes * scale * damping_pct > 2**63 - 1:
-        raise ValueError(
-            f"pagerank overflow risk: n_nodes={n_nodes} * scale={scale} "
-            f"* damping_pct={damping_pct} exceeds BIGINT range; lower "
-            f"`scale` (e.g. scale="
-            f"{max(1, (2**63 - 1) // max(n_nodes * damping_pct, 1))} "
-            f"or below)")
-    base = scale * (100 - damping_pct) // 100
-    ranks = nodes.withColumn("rank", F.lit(scale).cast("bigint")) \
-        .localCheckpoint(eager=True)
-    for _ in range(iterations):
-        incoming = (
-            e2.join(ranks.withColumnRenamed("id", "src"), on="src")
-            .select("dst", F.expr("rank div odeg").alias("contrib"))
-            .groupBy("dst").agg(F.sum("contrib").alias("inc"))
-        )
-        new_ranks = (
-            nodes.join(incoming.withColumnRenamed("dst", "id"),
-                       on="id", how="left")
-            .select("id",
-                    (F.lit(base)
-                     + F.expr(f"{damping_pct} * coalesce(inc, 0L) div 100"))
-                    .cast("bigint").alias("rank"))
-            .localCheckpoint(eager=True)
-        )
-        release_local_checkpoint(ranks)
-        ranks = new_ranks
-    return ranks
+    with staged() as st:
+        e2 = st.checkpoint(e.join(outdeg, on="src"))
+        nodes = st.checkpoint(e.select(F.col("src").alias("id"))
+                              .unionByName(e.select(F.col("dst").alias("id")))
+                              .distinct())
+        # Overflow guard (see docstring): a node's incoming sum is bounded by
+        # the total rank mass <= n_nodes * scale, and the update computes the
+        # intermediate product damping_pct * inc BEFORE the //100 — so the
+        # binding constraint is n_nodes * scale * damping_pct <= 2^63-1.
+        # Past it, Spark's BIGINT arithmetic either wraps silently (non-ANSI
+        # sum) or aborts mid-job (ANSI multiply) — raise up front instead.
+        # The count is metadata-sized (nodes is already checkpointed).
+        n_nodes = nodes.count()
+        if n_nodes * scale * damping_pct > 2**63 - 1:
+            raise ValueError(
+                f"pagerank overflow risk: n_nodes={n_nodes} * scale={scale} "
+                f"* damping_pct={damping_pct} exceeds BIGINT range; lower "
+                f"`scale` (e.g. scale="
+                f"{max(1, (2**63 - 1) // max(n_nodes * damping_pct, 1))} "
+                f"or below)")
+        base = scale * (100 - damping_pct) // 100
+        ranks = st.checkpoint(
+            nodes.withColumn("rank", F.lit(scale).cast("bigint")))
+        for _ in range(iterations):
+            incoming = (
+                e2.join(ranks.withColumnRenamed("id", "src"), on="src")
+                .select("dst", F.expr("rank div odeg").alias("contrib"))
+                .groupBy("dst").agg(F.sum("contrib").alias("inc"))
+            )
+            new_ranks = st.checkpoint(
+                nodes.join(incoming.withColumnRenamed("dst", "id"),
+                           on="id", how="left")
+                .select("id",
+                        (F.lit(base)
+                         + F.expr(f"{damping_pct} * coalesce(inc, 0L)"
+                                  " div 100"))
+                        .cast("bigint").alias("rank")))
+            st.release(ranks)
+            ranks = new_ranks
+        return st.keep(ranks)

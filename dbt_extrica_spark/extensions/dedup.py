@@ -27,6 +27,8 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..staging import staged
+
 
 def _spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Repartition compute-heavy inputs: a small parquet file arrives as one
@@ -242,12 +244,15 @@ def minhash_lsh_pairs(
     linear) into connected_components / leakage_safe_split — identical
     components, no quadratic blowup.
 
-    The returned pair set is pinned with ``localCheckpoint`` (executor block
-    storage, NOT a reliable checkpoint): under dynamic allocation or
-    executor loss the DataFrame becomes unrecoverable and must be
-    recomputed. Fine for the intended shape (a small pair set consumed
-    promptly); for long-lived sessions on preemptible clusters, write the
-    result to a table instead of holding the handle.
+    The returned pair set (and the membership table) is pinned with
+    ``localCheckpoint`` (executor block storage, NOT a reliable
+    checkpoint) and owned by the caller: free it with
+    ``staging.release`` or hold it in a ``staged()`` block once it
+    is consumed. Every intermediate this function pins is released before
+    it returns, also when it raises. Under dynamic allocation or executor
+    loss the checkpoint becomes unrecoverable and must be recomputed;
+    for long-lived sessions on preemptible clusters, write the result to
+    a table instead of holding the handle.
     """
     if not expand_members and not collapse_identical:
         raise ValueError(
@@ -262,112 +267,98 @@ def minhash_lsh_pairs(
     texts = _spread(df.select(F.col(id_col).alias("id"),
                               F.col(text_col).alias("text")))
 
-    mapping = None
-    if collapse_identical:
-        # one cheap hash scan — no shingling until the representatives;
-        # NULL texts group together (null_group=True) because the
-        # signature path emits pairs for them (the '' shingle floor), so
-        # collapse must too for exact output equivalence
-        mapping = text_identity_groups(texts, "id", "text").persist()
-        work = texts.join(
-            mapping.where(F.col("id") == F.col("rep")).select("id"),
-            on="id", how="left_semi")
-    else:
-        work = texts
-    sig = (
-        work
-        .withColumn("h1", F.expr(
-            f"transform({_shingle_expr('text', k)}, s -> xxhash64(s))"
-        ))
-        .withColumn("sig", minhash_signature_from_hashes("h1", num_perm))
-        .select("id", "sig")
-    )
-
-    # the self-join below scans `banded` twice; persisting the (tiny:
-    # docs × bands rows) band table makes the expensive shingle+signature
-    # pipeline run exactly once
-    banded = _bands_from_sigs(sig, bands, rows_per_band).persist()
-
-    left = banded.alias("a")
-    right = banded.alias("b")
-    cand = (
-        left.join(
-            right,
-            on=[F.col("a.band") == F.col("b.band"),
-                F.col("a.bh") == F.col("b.bh"),
-                F.col("a.id") < F.col("b.id")],
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    if not verify:
-        rep_pairs = cand.withColumn("jaccard", F.lit(None).cast("double"))
-    else:
-        # candidates are tiny relative to the corpus; persist so the
-        # broadcast id-set below doesn't re-run the signature+banding
-        # pipeline
-        cand = cand.persist()
-
-        # verification: shingle sets are recomputed ONLY for candidate docs
-        # (semi-join on the candidate id set before the expensive shingling,
-        # so at corpus scale the exact-Jaccard pass touches a tiny fraction)
-        cand_ids = (
-            cand.select(F.col("id_a").alias("id"))
-            .unionByName(cand.select(F.col("id_b").alias("id")))
-            .distinct()
-        )
-        # persist: sh feeds BOTH sides of the pair join below — without the
-        # cache its subtree (scan + broadcast semi-join + the expensive
-        # per-row shingle projection) executes twice, once per side (the
-        # ngram_jaccard_pairs garr precedent; measured ~1s of the verify
-        # stage at sf0.1)
-        sh = (
-            work.join(F.broadcast(cand_ids), on="id", how="left_semi")
-            .select("id", char_shingles("text", k).alias("sh"))
-            .persist()
-        )
-        pairs = (
-            cand.join(sh.withColumnRenamed("sh", "sh_a"),
-                      cand.id_a == sh.id).drop("id")
-            .join(sh.withColumnRenamed("sh", "sh_b"),
-                  cand.id_b == sh.id).drop("id")
-            .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        )
-        # |A∪B| = |A|+|B|-|A∩B| on the already-distinct shingle arrays:
-        # identical integers (so an identical double), without building
-        # the union array — half the per-pair set work
-        jac = (F.col("inter")
-               / (F.size("sh_a") + F.size("sh_b") - F.col("inter")))
-        rep_pairs = (
-            pairs.withColumn("jaccard", jac.cast("double"))
-            .where(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
+    with staged() as st:
+        mapping = None
+        if collapse_identical:
+            # one cheap hash scan — no shingling until the representatives;
+            # NULL texts group together (null_group=True) because the
+            # signature path emits pairs for them (the '' shingle floor), so
+            # collapse must too for exact output equivalence
+            mapping = st.cache(text_identity_groups(texts, "id", "text"))
+            work = texts.join(
+                mapping.where(F.col("id") == F.col("rep")).select("id"),
+                on="id", how="left_semi")
+        else:
+            work = texts
+        sig = (
+            work
+            .withColumn("h1", F.expr(
+                f"transform({_shingle_expr('text', k)}, s -> xxhash64(s))"
+            ))
+            .withColumn("sig", minhash_signature_from_hashes("h1", num_perm))
+            .select("id", "sig")
         )
 
-    if not expand_members:
-        # group mode: rep-level pairs + the linear membership table; the
-        # m²/2 member expansion never materializes
-        out_pairs = rep_pairs.localCheckpoint(eager=True)
-        out_membership = (mapping.select("id", "rep", "gsize")
-                          .localCheckpoint(eager=True))
-        banded.unpersist()
-        if verify:
-            cand.unpersist()
-            sh.unpersist()
-        mapping.unpersist()
-        return out_pairs, out_membership
+        # the self-join below scans `banded` twice; persisting the (tiny:
+        # docs × bands rows) band table makes the expensive shingle+signature
+        # pipeline run exactly once
+        banded = st.cache(_bands_from_sigs(sig, bands, rows_per_band))
 
-    if mapping is not None:
-        rep_pairs = expand_group_pairs(rep_pairs, mapping, verified=verify)
+        left = banded.alias("a")
+        right = banded.alias("b")
+        cand = (
+            left.join(
+                right,
+                on=[F.col("a.band") == F.col("b.band"),
+                    F.col("a.bh") == F.col("b.bh"),
+                    F.col("a.id") < F.col("b.id")],
+            )
+            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+            .dropDuplicates(["id_a", "id_b"])
+        )
+        if not verify:
+            rep_pairs = cand.withColumn("jaccard", F.lit(None).cast("double"))
+        else:
+            # candidates are tiny relative to the corpus; persist so the
+            # broadcast id-set below doesn't re-run the signature+banding
+            # pipeline
+            cand = st.cache(cand)
 
-    out = rep_pairs.localCheckpoint(eager=True)  # small: true pairs only
-    banded.unpersist()
-    if verify:
-        cand.unpersist()
-        sh.unpersist()
-    if mapping is not None:
-        mapping.unpersist()
-    return out
+            # verification: shingle sets are recomputed ONLY for candidate
+            # docs (semi-join on the candidate id set before the expensive
+            # shingling, so at corpus scale the exact-Jaccard pass touches a
+            # tiny fraction)
+            cand_ids = (
+                cand.select(F.col("id_a").alias("id"))
+                .unionByName(cand.select(F.col("id_b").alias("id")))
+                .distinct()
+            )
+            # persist: sh feeds BOTH sides of the pair join below — without the
+            # cache its subtree (scan + broadcast semi-join + the expensive
+            # per-row shingle projection) executes twice, once per side (the
+            # ngram_jaccard_pairs garr precedent; measured ~1s of the verify
+            # stage at sf0.1)
+            sh = st.cache(
+                work.join(F.broadcast(cand_ids), on="id", how="left_semi")
+                .select("id", char_shingles("text", k).alias("sh")))
+            pairs = (
+                cand.join(sh.withColumnRenamed("sh", "sh_a"),
+                          cand.id_a == sh.id).drop("id")
+                .join(sh.withColumnRenamed("sh", "sh_b"),
+                      cand.id_b == sh.id).drop("id")
+                .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
+            )
+            # |A∪B| = |A|+|B|-|A∩B| on the already-distinct shingle arrays:
+            # identical integers (so an identical double), without building
+            # the union array — half the per-pair set work
+            jac = (F.col("inter")
+                   / (F.size("sh_a") + F.size("sh_b") - F.col("inter")))
+            rep_pairs = (
+                pairs.withColumn("jaccard", jac.cast("double"))
+                .where(F.col("jaccard") >= threshold)
+                .select("id_a", "id_b", "jaccard")
+            )
+
+        if not expand_members:
+            # group mode: rep-level pairs + the linear membership table; the
+            # m²/2 member expansion never materializes
+            return (rep_pairs.localCheckpoint(eager=True),
+                    mapping.select("id", "rep", "gsize")
+                    .localCheckpoint(eager=True))
+
+        if mapping is not None:
+            rep_pairs = expand_group_pairs(rep_pairs, mapping, verified=verify)
+        return rep_pairs.localCheckpoint(eager=True)  # small: true pairs only
 
 
 def text_identity_groups(df: DataFrame, id_col: str, text_col: str,
@@ -763,40 +754,39 @@ def minhash_incremental_pairs(
     )
     if not verify:
         return cand.withColumn("jaccard", F.lit(None).cast("double"))
-    cand = cand.persist()
-    # _spread BEFORE the shingle projection: the semi-joined text side
-    # inherits the parquet scan's (possibly single) split, which would
-    # serialize the per-row shingling onto one core — the band-table path
-    # already spreads for the same reason (measured: the new-side shingle
-    # pass alone was 2.2-3.4s single-split vs ~0.3s spread at sf0.1)
-    sh_new = (
-        _spread(new_df.select(F.col(id_col).alias("id_new"),
-                              F.col(text_col).alias("text"))
-                .join(F.broadcast(cand.select("id_new").distinct()),
-                      on="id_new", how="left_semi"))
-        .select("id_new", char_shingles("text", k).alias("sh_a"))
-    )
-    sh_hist = (
-        _spread(hist_df.select(F.col(id_col).alias("id_hist"),
-                               F.col(text_col).alias("text"))
-                .join(F.broadcast(cand.select("id_hist").distinct()),
-                      on="id_hist", how="left_semi"))
-        .select("id_hist", char_shingles("text", k).alias("sh_b"))
-    )
-    # |A∪B| = |A|+|B|-|A∩B| on the already-distinct shingle arrays —
-    # identical value, no union array built (see minhash_lsh_pairs)
-    jac = (F.col("inter")
-           / (F.size("sh_a") + F.size("sh_b") - F.col("inter")))
-    out = (
-        cand.join(sh_new, on="id_new").join(sh_hist, on="id_hist")
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn("jaccard", jac.cast("double"))
-        .where(F.col("jaccard") >= threshold)
-        .select("id_new", "id_hist", "jaccard")
-        .localCheckpoint(eager=True)
-    )
-    cand.unpersist()
-    return out
+    with staged() as st:
+        cand = st.cache(cand)
+        # _spread BEFORE the shingle projection: the semi-joined text side
+        # inherits the parquet scan's (possibly single) split, which would
+        # serialize the per-row shingling onto one core — the band-table path
+        # already spreads for the same reason (measured: the new-side shingle
+        # pass alone was 2.2-3.4s single-split vs ~0.3s spread at sf0.1)
+        sh_new = (
+            _spread(new_df.select(F.col(id_col).alias("id_new"),
+                                  F.col(text_col).alias("text"))
+                    .join(F.broadcast(cand.select("id_new").distinct()),
+                          on="id_new", how="left_semi"))
+            .select("id_new", char_shingles("text", k).alias("sh_a"))
+        )
+        sh_hist = (
+            _spread(hist_df.select(F.col(id_col).alias("id_hist"),
+                                   F.col(text_col).alias("text"))
+                    .join(F.broadcast(cand.select("id_hist").distinct()),
+                          on="id_hist", how="left_semi"))
+            .select("id_hist", char_shingles("text", k).alias("sh_b"))
+        )
+        # |A∪B| = |A|+|B|-|A∩B| on the already-distinct shingle arrays —
+        # identical value, no union array built (see minhash_lsh_pairs)
+        jac = (F.col("inter")
+               / (F.size("sh_a") + F.size("sh_b") - F.col("inter")))
+        return (
+            cand.join(sh_new, on="id_new").join(sh_hist, on="id_hist")
+            .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
+            .withColumn("jaccard", jac.cast("double"))
+            .where(F.col("jaccard") >= threshold)
+            .select("id_new", "id_hist", "jaccard")
+            .localCheckpoint(eager=True)
+        )
 
 
 # --------------------------------------------------------------------------
@@ -926,9 +916,10 @@ def ngram_jaccard_pairs(
     t*max(|A|,|B|) <= min(|A|,|B|).
 
     The returned pair set is materialized eagerly (localCheckpoint) so the
-    persisted intermediates — the exploded gram rows, orders of magnitude
-    larger than the pair output — can be unpersisted before returning;
-    repeated calls in a long-lived session don't accumulate cached blocks.
+    staged intermediates — the exploded gram rows, orders of magnitude
+    larger than the pair output — are released before returning; repeated
+    calls in a long-lived session don't accumulate cached blocks. The
+    returned checkpoint is the caller's to release.
 
     ``hashed_grams`` (one-pass path only): optional precomputed
     (``id``, ``n_g``, ``gh: array<bigint>``) — xxhash64-hashed DISTINCT
@@ -966,162 +957,134 @@ def ngram_jaccard_pairs(
     )
     jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
 
-    if not prefix_filter:
-        # join on 64-bit HASHED grams (measured ~4x over string keys: the
-        # join mass is dominated by string hashing/compares), then confirm
-        # the few passing pairs EXACTLY on the true gram sets. This is
-        # provably exact despite hash collisions: a collision can only
-        # INFLATE a counted intersection (every truly-shared gram still
-        # matches on its hash), so the hash-counted pass set is a superset
-        # of the true pairs and the exact confirmation removes the (rare)
-        # spurious ones. Persist the COMPACT exploded rows (id, n_g, h) —
-        # columnar-caching the string arrays measured ~2.5s of pure
-        # cache-build at sf0.1, and without a persist the self-join would
-        # recompute the shingling for each side.
-        if hashed_grams is not None:
-            exploded = hashed_grams.select(
-                F.col("id"), F.col("n_g"), F.explode("gh").alias("h"),
-            ).persist()
-        else:
-            exploded = grams.select(
+    with staged() as st:
+        if not prefix_filter:
+            # join on 64-bit HASHED grams (measured ~4x over string keys: the
+            # join mass is dominated by string hashing/compares), then confirm
+            # the few passing pairs EXACTLY on the true gram sets. This is
+            # provably exact despite hash collisions: a collision can only
+            # INFLATE a counted intersection (every truly-shared gram still
+            # matches on its hash), so the hash-counted pass set is a superset
+            # of the true pairs and the exact confirmation removes the (rare)
+            # spurious ones. Persist the COMPACT exploded rows (id, n_g, h) —
+            # columnar-caching the string arrays measured ~2.5s of pure
+            # cache-build at sf0.1, and without a persist the self-join would
+            # recompute the shingling for each side.
+            if hashed_grams is not None:
+                exploded = st.cache(hashed_grams.select(
+                    F.col("id"), F.col("n_g"), F.explode("gh").alias("h")))
+            else:
+                exploded = st.cache(grams.select(
+                    "id", "n_g",
+                    F.explode(F.expr("transform(g, x -> xxhash64(x))"))
+                    .alias("h")))
+            a, b = exploded.alias("a"), exploded.alias("b")
+            shared = (
+                a.join(b, on=[F.col("a.h") == F.col("b.h"),
+                              F.col("a.id") < F.col("b.id"),
+                              ratio_ok])
+                .groupBy(
+                    F.col("a.id").alias("id_a"),
+                    F.col("b.id").alias("id_b"),
+                    F.col("a.n_g").alias("na"),
+                    F.col("b.n_g").alias("nb"),
+                )
+                .agg(F.count(F.lit(1)).alias("inter"))
+            )
+            # tiny (bounded by the true near-dup pair count) but referenced by
+            # three consumers (the broadcast id set, the confirm join, and the
+            # caller's plan) — persist so the join+groupBy over the exploded
+            # grams runs once
+            passing = st.cache(
+                shared.withColumn("jaccard", jac.cast("double"))
+                .where(F.col("jaccard") >= t)
+                .select("id_a", "id_b"))
+            pass_ids = (
+                passing.select(F.col("id_a").alias("id"))
+                .unionByName(passing.select(F.col("id_b").alias("id")))
+                .distinct()
+            )
+            # persist: garr feeds BOTH sides of the confirm join below —
+            # without the cache its subtree (scan + broadcast semi-join +
+            # shingle) would execute twice, and the per-row shingle
+            # projection is the expensive part (measured ~1.5s per extra
+            # execution at sf0.1)
+            # semi-join BEFORE _spread: the confirm set is tiny (passing-pair
+            # docs only), so the broadcast filter must run at the scan and the
+            # round-robin spread move only the survivors — spreading first
+            # would shuffle the whole corpus to then discard almost all of it
+            garr = st.cache(
+                _spread(df.select(F.col(id_col).alias("id"),
+                                  F.col(text_col).alias("text"))
+                        .join(F.broadcast(pass_ids), on="id", how="left_semi"))
+                .select("id", _tokens_col("text").alias("__toks"))
+                .select("id", word_ngrams_from_tokens("__toks", n).alias("g"))
+                .withColumn("n_g", F.size("g")))
+            confirmed = (
+                passing
+                .join(garr.select(F.col("id").alias("id_a"),
+                                  F.col("g").alias("ga"),
+                                  F.col("n_g").alias("na")), on="id_a")
+                .join(garr.select(F.col("id").alias("id_b"),
+                                  F.col("g").alias("gb"),
+                                  F.col("n_g").alias("nb")), on="id_b")
+                .withColumn("inter", F.size(F.array_intersect("ga", "gb")))
+            )
+            return (
+                confirmed.withColumn("jaccard", jac.cast("double"))
+                .where(F.col("jaccard") >= t)
+                .select("id_a", "id_b", "jaccard")
+                .localCheckpoint(eager=True)  # small: true near-dup pairs only
+            )
+
+        grams = st.cache(grams)
+        exploded = grams.select("id", "n_g", F.explode("g").alias("gram"))
+        gram_df = exploded.groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
+        # epsilon guards binary-float overshoot (15*0.2 -> 3.0000000000000004);
+        # it can only LENGTHEN the prefix, so exactness is preserved
+        prefix_len = (
+            F.col("n_g") - F.ceil(F.col("n_g") * t - 1e-9) + 1
+        ).cast("int")
+        # self-joined twice below; don't recompute the df-sort
+        prefix = st.cache(
+            exploded.join(gram_df, on="gram")
+            .groupBy("id", "n_g")
+            .agg(F.sort_array(F.collect_list(F.struct("df", "gram")))
+                 .alias("o"))
+            .select(
                 "id", "n_g",
-                F.explode(F.expr("transform(g, x -> xxhash64(x))")).alias("h"),
-            ).persist()
-        a, b = exploded.alias("a"), exploded.alias("b")
-        shared = (
-            a.join(b, on=[F.col("a.h") == F.col("b.h"),
+                F.explode(F.slice(F.col("o.gram"), F.lit(1), prefix_len))
+                .alias("gram"),
+            ))
+        a, b = prefix.alias("a"), prefix.alias("b")
+        cand = (
+            a.join(b, on=[F.col("a.gram") == F.col("b.gram"),
                           F.col("a.id") < F.col("b.id"),
                           ratio_ok])
-            .groupBy(
-                F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-                F.col("a.n_g").alias("na"),
-                F.col("b.n_g").alias("nb"),
-            )
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-        # tiny (bounded by the true near-dup pair count) but referenced by
-        # three consumers (the broadcast id set, the confirm join, and the
-        # caller's plan) — persist so the join+groupBy over the exploded
-        # grams runs once
-        passing = (
-            shared.withColumn("jaccard", jac.cast("double"))
-            .where(F.col("jaccard") >= t)
-            .select("id_a", "id_b")
-            .persist()
-        )
-        pass_ids = (
-            passing.select(F.col("id_a").alias("id"))
-            .unionByName(passing.select(F.col("id_b").alias("id")))
+            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
             .distinct()
         )
-        # persist: garr feeds BOTH sides of the confirm join below — without
-        # the cache its subtree (scan + broadcast semi-join + shingle) would
-        # execute twice, and the per-row shingle projection is the expensive
-        # part (measured ~1.5s per extra execution at sf0.1)
-        # semi-join BEFORE _spread: the confirm set is tiny (passing-pair
-        # docs only), so the broadcast filter must run at the scan and the
-        # round-robin spread move only the survivors — spreading first
-        # would shuffle the whole corpus to then discard almost all of it
-        garr = (
-            _spread(df.select(F.col(id_col).alias("id"),
-                              F.col(text_col).alias("text"))
-                    .join(F.broadcast(pass_ids), on="id", how="left_semi"))
-            .select("id", _tokens_col("text").alias("__toks"))
-            .select("id", word_ngrams_from_tokens("__toks", n).alias("g"))
-            .withColumn("n_g", F.size("g"))
-            .persist()
-        )
-        confirmed = (
-            passing
-            .join(garr.select(F.col("id").alias("id_a"),
-                              F.col("g").alias("ga"),
-                              F.col("n_g").alias("na")), on="id_a")
-            .join(garr.select(F.col("id").alias("id_b"),
-                              F.col("g").alias("gb"),
-                              F.col("n_g").alias("nb")), on="id_b")
+        ver = (
+            cand
+            .join(grams.select(F.col("id").alias("id_a"),
+                               F.col("g").alias("ga"),
+                               F.col("n_g").alias("na")), on="id_a")
+            .join(grams.select(F.col("id").alias("id_b"),
+                               F.col("g").alias("gb"),
+                               F.col("n_g").alias("nb")), on="id_b")
             .withColumn("inter", F.size(F.array_intersect("ga", "gb")))
         )
-        result = (
-            confirmed.withColumn("jaccard", jac.cast("double"))
+        return (
+            ver.withColumn("jaccard", jac.cast("double"))
             .where(F.col("jaccard") >= t)
             .select("id_a", "id_b", "jaccard")
             .localCheckpoint(eager=True)  # small: true near-dup pairs only
         )
-        exploded.unpersist()
-        passing.unpersist()
-        garr.unpersist()
-        return result
-
-    grams = grams.persist()
-    exploded = grams.select("id", "n_g", F.explode("g").alias("gram"))
-    gram_df = exploded.groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
-    # epsilon guards binary-float overshoot (15*0.2 -> 3.0000000000000004);
-    # it can only LENGTHEN the prefix, so exactness is preserved
-    prefix_len = (
-        F.col("n_g") - F.ceil(F.col("n_g") * t - 1e-9) + 1
-    ).cast("int")
-    prefix = (
-        exploded.join(gram_df, on="gram")
-        .groupBy("id", "n_g")
-        .agg(F.sort_array(F.collect_list(F.struct("df", "gram"))).alias("o"))
-        .select(
-            "id", "n_g",
-            F.explode(F.slice(F.col("o.gram"), F.lit(1), prefix_len))
-            .alias("gram"),
-        )
-        .persist()  # self-joined twice below; don't recompute the df-sort
-    )
-    a, b = prefix.alias("a"), prefix.alias("b")
-    cand = (
-        a.join(b, on=[F.col("a.gram") == F.col("b.gram"),
-                      F.col("a.id") < F.col("b.id"),
-                      ratio_ok])
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    ver = (
-        cand
-        .join(grams.select(F.col("id").alias("id_a"), F.col("g").alias("ga"),
-                           F.col("n_g").alias("na")), on="id_a")
-        .join(grams.select(F.col("id").alias("id_b"), F.col("g").alias("gb"),
-                           F.col("n_g").alias("nb")), on="id_b")
-        .withColumn("inter", F.size(F.array_intersect("ga", "gb")))
-    )
-    result = (
-        ver.withColumn("jaccard", jac.cast("double"))
-        .where(F.col("jaccard") >= t)
-        .select("id_a", "id_b", "jaccard")
-        .localCheckpoint(eager=True)  # small: true near-dup pairs only
-    )
-    grams.unpersist()
-    prefix.unpersist()
-    return result
 
 
 # --------------------------------------------------------------------------
 # duplicate clustering (iterative connected components)
 # --------------------------------------------------------------------------
-
-def release_local_checkpoint(df: DataFrame) -> None:
-    """Free the block-manager storage behind a ``localCheckpoint``-backed
-    DataFrame. ``DataFrame.unpersist`` only talks to the SQL cache
-    manager; a local checkpoint's blocks belong to the underlying
-    LogicalRDD and stay resident until driver GC + ContextCleaner get
-    around to them. At one checkpoint per connected-components round,
-    repeated invocations in one session accumulate resident blocks
-    (measured warm-run growth 5.3s -> 8.0s over 3 runs of the joint-dedup
-    pipeline); freeing superseded rounds explicitly keeps repeat timings
-    flat. The DataFrame is UNUSABLE after this call — only release
-    checkpoints nothing references anymore. Best-effort: any JVM-shape
-    surprise degrades to the old GC-eventually behavior."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
-    except Exception:
-        pass
-
 
 def connected_components(pairs: DataFrame, max_iter: int = 20,
                          stats: dict | None = None,
@@ -1163,127 +1126,120 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
     disable (always iterate — the convergence-guard and probe tools do
     this to exercise the distributed loop).
     """
-    pairs_sel = pairs.select("id_a", "id_b")
-    if local_threshold:
-        pairs_sel = pairs_sel.persist()
-        n_pairs = pairs_sel.count()
-        if n_pairs <= local_threshold:
-            rows = pairs_sel.collect()
-            pairs_sel.unpersist()
-            parent: dict = {}
+    with staged() as st:
+        pairs_sel = pairs.select("id_a", "id_b")
+        if local_threshold:
+            pairs_sel = st.cache(pairs_sel)
+            n_pairs = pairs_sel.count()
+            if n_pairs <= local_threshold:
+                rows = pairs_sel.collect()
+                st.release(pairs_sel)
+                parent: dict = {}
 
-            def _find(x):
-                while parent.setdefault(x, x) != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
+                def _find(x):
+                    while parent.setdefault(x, x) != x:
+                        parent[x] = parent[parent[x]]
+                        x = parent[x]
+                    return x
 
-            for r in rows:
-                ra, rb = _find(r[0]), _find(r[1])
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
+                for r in rows:
+                    ra, rb = _find(r[0]), _find(r[1])
+                    if ra != rb:
+                        parent[max(ra, rb)] = min(ra, rb)
+                if stats is not None:
+                    stats["rounds"] = 0
+                from pyspark.sql.types import StructField, StructType
+
+                id_type = pairs.schema["id_a"].dataType
+                schema = StructType([StructField("id", id_type, True),
+                                     StructField("component", id_type, True)])
+                return pairs.sparkSession.createDataFrame(
+                    [(n, _find(n)) for n in parent], schema)
+        edges = st.cache(
+            pairs_sel.select(F.col("id_a").alias("src"),
+                             F.col("id_b").alias("dst"))
+            .unionByName(pairs_sel.select(F.col("id_b").alias("src"),
+                                          F.col("id_a").alias("dst")))
+            .distinct())
+        # force-COMPLETE the cache before iterating: the loop's convergence
+        # probe ends in limit(1).count(), which can stop consuming before the
+        # cache blocks finish building — a partially-built cache makes every
+        # iteration re-execute the full (possibly expensive) pairs subtree
+        # (measured 8x wall on a deep pair plan).
+        edges.count()
+        if local_threshold:
+            st.release(pairs_sel)
+        labels = st.cache(
+            edges.select(F.col("src").alias("id"))
+            .distinct()
+            .withColumn("component", F.col("id")))
+        labels.count()
+        for i in range(max_iter):
+            neighbor_min = (
+                edges.join(labels, edges.dst == labels.id)
+                .groupBy("src").agg(F.min("component").alias("nbr_component"))
+            )
+            stepped = (
+                labels.join(neighbor_min, labels.id == neighbor_min.src,
+                            "left")
+                .select(
+                    "id",
+                    F.col("component").alias("ocomp"),
+                    F.least(
+                        F.col("component"),
+                        F.coalesce(F.col("nbr_component"), F.col("component")),
+                    ).alias("component"),
+                )
+            )
+            # pointer-jumping shortcut: follow the label chain one hop
+            # (component := label[component]); combined with the neighbor-min
+            # step above, label paths halve every round -> O(log diameter)
+            # rounds instead of O(diameter). The jump table is the label table
+            # itself (tiny: one row per node appearing in a pair).
+            jump = stepped.select(F.col("id").alias("jid"),
+                                  F.col("component").alias("jcomp"))
+            final_comp = F.least(
+                F.col("component"),
+                F.coalesce(F.col("jcomp"), F.col("component")),
+            )
+            new_labels = (
+                stepped.join(jump, stepped.component == jump.jid, "left")
+                .select(
+                    "id",
+                    final_comp.alias("component"),
+                    # convergence flag computed IN the round's own pass:
+                    # comparing against the pre-step label here replaces the
+                    # old per-round labels-vs-new_labels shuffle join whose
+                    # only purpose was this comparison (both sides non-null:
+                    # labels init component = id)
+                    (final_comp != F.col("ocomp")).alias("chg"),
+                )
+            )
+            # checkpoint EVERY round: persist alone leaves the logical plan
+            # growing linearly with iterations, and per-round analysis/AQE
+            # planning over the accumulated lineage ballooned from 2s to 19s
+            # within 4 rounds on a deep pair plan. localCheckpoint truncates
+            # lineage; the label table is tiny at any scale (one row per
+            # node that appears in a duplicate pair).
+            new_labels = st.checkpoint(new_labels)
+            changed = new_labels.where("chg").limit(1).count()
+            # the superseded round is fully consumed (new_labels checkpointed
+            # eagerly, changed-probe done): release its storage NOW instead of
+            # waiting for driver GC
+            st.release(labels)
+            labels = new_labels
             if stats is not None:
-                stats["rounds"] = 0
-            from pyspark.sql.types import StructField, StructType
-
-            id_type = pairs.schema["id_a"].dataType
-            schema = StructType([StructField("id", id_type, True),
-                                 StructField("component", id_type, True)])
-            return pairs.sparkSession.createDataFrame(
-                [(n, _find(n)) for n in parent], schema)
-    edges = (
-        pairs_sel.select(F.col("id_a").alias("src"),
-                         F.col("id_b").alias("dst"))
-        .unionByName(pairs_sel.select(F.col("id_b").alias("src"),
-                                      F.col("id_a").alias("dst")))
-        .distinct()
-        .persist()
-    )
-    # force-COMPLETE the cache before iterating: the loop's convergence
-    # probe ends in limit(1).count(), which can stop consuming before the
-    # cache blocks finish building — a partially-built cache makes every
-    # iteration re-execute the full (possibly expensive) pairs subtree
-    # (measured 8x wall on a deep pair plan).
-    edges.count()
-    if local_threshold:
-        pairs_sel.unpersist()
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-        .persist()
-    )
-    labels.count()
-    for i in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy("src").agg(F.min("component").alias("nbr_component"))
-        )
-        stepped = (
-            labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
-            .select(
-                "id",
-                F.col("component").alias("ocomp"),
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("nbr_component"), F.col("component")),
-                ).alias("component"),
+                stats["rounds"] = i + 1
+            if changed == 0:
+                break
+        else:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} rounds; "
+                f"labels are PARTIAL (one true component may be split into "
+                f"several). With pointer jumping this needs a graph diameter "
+                f"> ~2^{max_iter} — raise max_iter."
             )
-        )
-        # pointer-jumping shortcut: follow the label chain one hop
-        # (component := label[component]); combined with the neighbor-min
-        # step above, label paths halve every round -> O(log diameter)
-        # rounds instead of O(diameter). The jump table is the label table
-        # itself (tiny: one row per node appearing in a pair).
-        jump = stepped.select(F.col("id").alias("jid"),
-                              F.col("component").alias("jcomp"))
-        final_comp = F.least(
-            F.col("component"),
-            F.coalesce(F.col("jcomp"), F.col("component")),
-        )
-        new_labels = (
-            stepped.join(jump, stepped.component == jump.jid, "left")
-            .select(
-                "id",
-                final_comp.alias("component"),
-                # convergence flag computed IN the round's own pass:
-                # comparing against the pre-step label here replaces the
-                # old per-round labels-vs-new_labels shuffle join whose
-                # only purpose was this comparison (both sides non-null:
-                # labels init component = id)
-                (final_comp != F.col("ocomp")).alias("chg"),
-            )
-        )
-        # checkpoint EVERY round: persist alone leaves the logical plan
-        # growing linearly with iterations, and per-round analysis/AQE
-        # planning over the accumulated lineage ballooned from 2s to 19s
-        # within 4 rounds on a deep pair plan. localCheckpoint truncates
-        # lineage; the label table is tiny at any scale (one row per
-        # node that appears in a duplicate pair).
-        new_labels = new_labels.localCheckpoint()
-        changed = new_labels.where("chg").limit(1).count()
-        # the superseded round is fully consumed (new_labels checkpointed
-        # eagerly, changed-probe done): release its storage NOW instead of
-        # waiting for driver GC — unpersist covers the round-0 persist,
-        # release_local_checkpoint the round>=1 checkpoints.
-        prev = labels
-        labels = new_labels
-        prev.unpersist()
-        release_local_checkpoint(prev)
-        if stats is not None:
-            stats["rounds"] = i + 1
-        if changed == 0:
-            break
-    else:
-        edges.unpersist()
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds; "
-            f"labels are PARTIAL (one true component may be split into "
-            f"several). With pointer jumping this needs a graph diameter "
-            f"> ~2^{max_iter} — raise max_iter."
-        )
-    edges.unpersist()
-    return labels.select("id", "component")
+        return st.keep(labels).select("id", "component")
 
 
 # --------------------------------------------------------------------------

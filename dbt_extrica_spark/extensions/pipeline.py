@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..staging import staged
 from . import dedup, similarity, textstats
 
 
@@ -97,59 +98,61 @@ def clean_corpus(
         feat_cols.append(
             F.transform(dedup.word_ngrams_from_tokens("__toks", 3),
                         lambda x: F.xxhash64(x)).alias("__gh"))
-    feats = base.select(*feat_cols).persist()
+    with staged() as st:
+        feats = st.cache(base.select(*feat_cols))
 
-    # 1. quality gate
-    kept = feats.where(
-        (F.col("quality_score") >= min_quality)
-        & (F.col("n_tokens") >= min_tokens)
-    )
+        # 1. quality gate
+        kept = feats.where(
+            (F.col("quality_score") >= min_quality)
+            & (F.col("n_tokens") >= min_tokens)
+        )
 
-    # 2. exact dedup (keep min doc_id per (digest, length) group)
-    keepers = kept.groupBy("__fp", "__len").agg(F.min("doc_id").alias("doc_id"))
-    kept = kept.join(keepers, on=["__fp", "__len", "doc_id"], how="left_semi")
+        # 2. exact dedup (keep min doc_id per (digest, length) group)
+        keepers = (kept.groupBy("__fp", "__len")
+                   .agg(F.min("doc_id").alias("doc_id")))
+        kept = kept.join(keepers, on=["__fp", "__len", "doc_id"],
+                         how="left_semi")
 
-    # 3. near-dup removal (exact n-gram Jaccard; drop the higher id) — the
-    # candidate join reuses the hashed gram arrays from the feature pass
-    # (no re-scan/re-shingle); only the exact confirmation of passing
-    # pairs re-reads text, and only for those few docs
-    if big:
-        surv_docs = base.join(kept.select("doc_id"), on="doc_id",
-                              how="left_semi")
-        pairs = dedup.ngram_jaccard_pairs(surv_docs, "doc_id", "text", n=3,
-                                          threshold=jaccard_threshold,
-                                          prefix_filter=True)
-    else:
-        surv_grams = kept.select(
-            F.col("doc_id").alias("id"), F.size("__gh").alias("n_g"),
-            F.col("__gh").alias("gh"))
-        # the confirm-stage collapse (r11 watch item, trigger fired r14):
-        # candidates come ONLY from hashed_grams (the survivors), so the
-        # df side exists purely to re-read the passing docs' text — feed
-        # it the RAW table, not the survivor semi-join: per-doc grams are
-        # doc-local, so the result is identical (A/B-verified), but the
-        # confirm's broadcast-filtered re-scan stops re-executing the
-        # whole quality/exact-dedup lineage (measured 4.5-4.8s -> 2.6-2.7s
-        # for the pair stage at sf0.1)
-        raw = docs.select(F.col(id_col).alias("doc_id"),
-                          F.col(text_col).alias("text"))
-        pairs = dedup.ngram_jaccard_pairs(raw, "doc_id", "text", n=3,
-                                          threshold=jaccard_threshold,
-                                          hashed_grams=surv_grams)
-    to_drop = pairs.select(F.col("id_b").alias("doc_id")).distinct()
-    kept = kept.join(to_drop, on="doc_id", how="left_anti")
+        # 3. near-dup removal (exact n-gram Jaccard; drop the higher id) — the
+        # candidate join reuses the hashed gram arrays from the feature pass
+        # (no re-scan/re-shingle); only the exact confirmation of passing
+        # pairs re-reads text, and only for those few docs
+        if big:
+            surv_docs = base.join(kept.select("doc_id"), on="doc_id",
+                                  how="left_semi")
+            pairs = st.hold(dedup.ngram_jaccard_pairs(
+                surv_docs, "doc_id", "text", n=3, threshold=jaccard_threshold,
+                prefix_filter=True))
+        else:
+            surv_grams = kept.select(
+                F.col("doc_id").alias("id"), F.size("__gh").alias("n_g"),
+                F.col("__gh").alias("gh"))
+            # the confirm-stage collapse (r11 watch item, trigger fired r14):
+            # candidates come ONLY from hashed_grams (the survivors), so the
+            # df side exists purely to re-read the passing docs' text — feed
+            # it the RAW table, not the survivor semi-join: per-doc grams are
+            # doc-local, so the result is identical (A/B-verified), but the
+            # confirm's broadcast-filtered re-scan stops re-executing the
+            # whole quality/exact-dedup lineage (measured 4.5-4.8s -> 2.6-2.7s
+            # for the pair stage at sf0.1)
+            raw = docs.select(F.col(id_col).alias("doc_id"),
+                              F.col(text_col).alias("text"))
+            pairs = st.hold(dedup.ngram_jaccard_pairs(
+                raw, "doc_id", "text", n=3, threshold=jaccard_threshold,
+                hashed_grams=surv_grams))
+        to_drop = pairs.select(F.col("id_b").alias("doc_id")).distinct()
+        kept = kept.join(to_drop, on="doc_id", how="left_anti")
 
-    # 4. language filter + 5. token accounting (already in the feature pass)
-    # materialize the compact result eagerly so the persisted feature table
-    # can be unpersisted here — repeated pipeline runs in one session must
-    # not accumulate cached feature blocks
-    result = (
-        kept.where(F.col("lang_pred") == lang)
-        .select("doc_id", "est_llm_tokens")
-        .localCheckpoint(eager=True)
-    )
-    feats.unpersist()
-    return result
+        # 4. language filter + 5. token accounting (already in the feature
+        # pass)
+        # materialize the compact result eagerly so the feature table and the
+        # pair set can be released here — repeated pipeline runs in one
+        # session must not accumulate cached blocks
+        return (
+            kept.where(F.col("lang_pred") == lang)
+            .select("doc_id", "est_llm_tokens")
+            .localCheckpoint(eager=True)
+        )
 
 
 def joint_dedup(
@@ -203,52 +206,53 @@ def joint_dedup(
     # pair at J=1 in the uncollapsed join — collapsing them to one rep
     # linked by member edges lands in the same component (verified by the
     # planted-NULL equivalence test).
-    mapping = dedup.text_identity_groups(
-        docs, doc_id_col, text_col, null_group=True).persist()
-    reps = docs.join(
-        mapping.where(F.col("id") == F.col("rep"))
-        .select(F.col("id").alias(doc_id_col)),
-        on=doc_id_col, how="left_semi")
-    if _over_rows(reps, doc_id_col, auto_scale_rows):
-        rep_text_pairs = dedup.ngram_jaccard_pairs(
-            reps, doc_id_col, text_col, n=ngram_n,
-            threshold=jaccard_threshold, prefix_filter=True
-        ).select("id_a", "id_b")
-    else:
-        rep_text_pairs = dedup.ngram_jaccard_pairs(
-            reps, doc_id_col, text_col, n=ngram_n,
-            threshold=jaccard_threshold
-        ).select("id_a", "id_b")
-    text_pairs = dedup.group_pairs_to_edges(rep_text_pairs, mapping)
-    if blocked_n_cells is None and auto_scale_rows is not None:
-        # one pruned count serves BOTH the routing decision and the √n
-        # cell derivation — not a bounded probe plus a second full scan
-        import math
+    with staged() as st:
+        mapping = st.cache(dedup.text_identity_groups(
+            docs, doc_id_col, text_col, null_group=True))
+        reps = docs.join(
+            mapping.where(F.col("id") == F.col("rep"))
+            .select(F.col("id").alias(doc_id_col)),
+            on=doc_id_col, how="left_semi")
+        if _over_rows(reps, doc_id_col, auto_scale_rows):
+            rep_text_pairs = st.hold(dedup.ngram_jaccard_pairs(
+                reps, doc_id_col, text_col, n=ngram_n,
+                threshold=jaccard_threshold, prefix_filter=True
+            )).select("id_a", "id_b")
+        else:
+            rep_text_pairs = st.hold(dedup.ngram_jaccard_pairs(
+                reps, doc_id_col, text_col, n=ngram_n,
+                threshold=jaccard_threshold
+            )).select("id_a", "id_b")
+        text_pairs = dedup.group_pairs_to_edges(rep_text_pairs, mapping)
+        if blocked_n_cells is None and auto_scale_rows is not None:
+            # one pruned count serves BOTH the routing decision and the √n
+            # cell derivation — not a bounded probe plus a second full scan
+            import math
 
-        n_vecs = embeddings.select(vec_id_col).count()
-        big_emb = n_vecs > auto_scale_rows
-        n_cells = max(16, math.isqrt(n_vecs))
-    else:
-        big_emb = _over_rows(embeddings, vec_id_col, auto_scale_rows)
-        n_cells = blocked_n_cells
-    if big_emb:
-        emb_pairs = similarity.cell_blocked_cosine_pairs(
-            embeddings, vec_id_col, vec_col, threshold=cosine_threshold,
-            n_cells=n_cells, nprobe=blocked_nprobe
-        ).select("id_a", "id_b")
-    else:
-        emb_pairs = dedup.embedding_cosine_pairs(
-            embeddings, vec_id_col, vec_col, threshold=cosine_threshold
-        ).select("id_a", "id_b")
-    # no .distinct() here: connected_components dedupes edges itself in
-    # the distributed path and the union-find fast path is insensitive to
-    # duplicate pairs — a distinct at this level is one full pair shuffle
-    # for nothing
-    pairs = text_pairs.unionByName(emb_pairs)
-    # connected_components materializes the pair set eagerly, so the
-    # mapping cache is consumed here; safe to release after
-    comp = dedup.connected_components(pairs)
-    mapping.unpersist()
+            n_vecs = embeddings.select(vec_id_col).count()
+            big_emb = n_vecs > auto_scale_rows
+            n_cells = max(16, math.isqrt(n_vecs))
+        else:
+            big_emb = _over_rows(embeddings, vec_id_col, auto_scale_rows)
+            n_cells = blocked_n_cells
+        if big_emb:
+            emb_pairs = similarity.cell_blocked_cosine_pairs(
+                embeddings, vec_id_col, vec_col, threshold=cosine_threshold,
+                n_cells=n_cells, nprobe=blocked_nprobe
+            ).select("id_a", "id_b")
+        else:
+            emb_pairs = dedup.embedding_cosine_pairs(
+                embeddings, vec_id_col, vec_col, threshold=cosine_threshold
+            ).select("id_a", "id_b")
+        # no .distinct() here: connected_components dedupes edges itself in
+        # the distributed path and the union-find fast path is insensitive to
+        # duplicate pairs — a distinct at this level is one full pair shuffle
+        # for nothing
+        pairs = text_pairs.unionByName(emb_pairs)
+        # connected_components materializes the pair set eagerly, so the
+        # mapping cache and the text pair set are consumed here; safe to
+        # release after
+        comp = dedup.connected_components(pairs)
     base = docs.select(F.col(doc_id_col).alias("doc_id"))
     return (
         base.join(comp.withColumnRenamed("id", "doc_id"), on="doc_id",

@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from ..staging import staged
+
 _DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * y),"
     " 0D, (acc, x) -> acc + x)"
@@ -1231,8 +1233,9 @@ def kmeans_lloyd_centroids(
     Cross-checkable: the identical arithmetic is replayable in pure Python
     (Decimal HALF_UP quantization + float division), which is how the
     battery's embedding_kmeans oracle pins this operator value-exactly."""
-    base = _km_base(df, id_col, vec_col)
-    return _km_train(base, k, iters, df.sparkSession)
+    with staged() as st:
+        base = st.hold(_km_base(df, id_col, vec_col))
+        return _km_train(base, k, iters, df.sparkSession)
 
 
 def _km_base(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -1244,11 +1247,10 @@ def _km_base(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     text->embed->cluster composite at sf0.1). localCheckpoint(eager=False)
     materializes the column on the first job and truncates lineage;
     iterations then scan stored rows, the shape a 100 TB run needs anyway
-    (persist-before-iterate). The stored blocks are released by Spark's
-    ContextCleaner once the returned DataFrame is no longer referenced
-    (catalog.clearCache does NOT cover checkpoint blocks) — long-lived
-    callers looping over corpora should drop result references rather
-    than accumulate them.
+    (persist-before-iterate). The checkpoint is the caller's:
+    kmeans_lloyd_centroids releases it once trained, kmeans_lloyd returns
+    an assignment that still reads it (catalog.clearCache does NOT cover
+    checkpoint blocks; staging.release does).
 
     NOTE (r17, tried and reverted): _spread-ing the slice before the
     checkpoint — the sf0.1 corpus arrives as ONE scan split, so every

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..staging import staged
+
 # small deterministic stopword lists for the n-gram/stopword language
 # heuristic; extend freely (order = tie-break preference)
 STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -884,89 +886,81 @@ def bpe_train(df: DataFrame, text_col: str, n_merges: int = 30,
     if strategy not in ("full", "delta", "driver"):
         raise ValueError(f"unknown bpe_train strategy {strategy!r}")
     toks = _tokens(text_col)
-    words = (
-        df.select(F.explode(F.expr(toks)).alias("w"))
-        .where(F.col("w") != "")
-        .groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn("syms", F.expr(
-            "transform(sequence(1, char_length(w)),"
-            " i -> substring(w, i, 1))"))
-        .select("cnt", "syms")
-        .localCheckpoint(eager=True)  # corpus pass paid once, here
-    )
-    if strategy == "driver":
-        probe = words.limit(max_driver_words + 1).count()
-        if probe > max_driver_words:
-            words.unpersist()
-            raise ValueError(
-                f"bpe_train(strategy='driver') collects the word-frequency "
-                f"table and the corpus has more than {max_driver_words} "
-                f"distinct words. Raise max_driver_words explicitly, train "
-                f"on a cleaned corpus, or use strategy='delta'.")
-        table = [(int(r["cnt"]), list(r["syms"])) for r in words.collect()]
-        words.unpersist()
-        return _bpe_train_driver(table, n_merges, min_pair_count)
-    merges: list[tuple[str, str, int]] = []
-    pairs = None
-    if strategy == "delta":
-        pairs = _bpe_pair_counts(words, F.col("cnt")) \
-            .localCheckpoint(eager=True)
-    for _ in range(n_merges):
-        src = pairs if pairs is not None else \
-            _bpe_pair_counts(words, F.col("cnt"))
-        top = (
-            src.orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .collect()  # exactly one row of driver state per iteration
-        )
-        if not top or top[0]["n"] < min_pair_count:
-            break
-        a, b, n = top[0]["a"], top[0]["b"], int(top[0]["n"])
-        merges.append((a, b, n))
-        if pairs is None:
-            nxt = (words.select("cnt", _bpe_merge_fold(a, b).alias("syms"))
-                   .localCheckpoint(eager=True))  # cut the fold lineage
-            words.unpersist()
-            words = nxt
-            continue
-        # delta path. The word-table update is the same single fold-all
-        # scan as "full" (the fold is the identity on non-carriers); the
-        # saving is the pair-count side: signed deltas explode from ONLY
-        # the carrier words — one filtered scan whose shuffle carries a
-        # sliver of the pair occurrences instead of all of them.
-        has = F.exists(
-            F.expr(_BPE_ZIP),
-            lambda p: (p["a"] == F.lit(a)) & (p["b"] == F.lit(b)))
-        both = words.where(has).select(
-            "cnt", F.col("syms").alias("syms_old"),
-            _bpe_merge_fold(a, b).alias("syms_new"))
-        signed = (
-            f"concat(transform({_bpe_zip('syms_old')},"
-            f" p -> struct(p.a AS a, p.b AS b,"
-            f" CAST(-cnt AS BIGINT) AS n)),"
-            f" transform({_bpe_zip('syms_new')},"
-            f" p -> struct(p.a AS a, p.b AS b,"
-            f" CAST(cnt AS BIGINT) AS n)))"
-        )
-        deltas = (both.select(F.explode(F.expr(signed)).alias("d"))
-                  .select("d.a", "d.b", "d.n"))
-        nxt_pairs = (
-            pairs.select("a", "b", F.col("n").cast("bigint").alias("n"))
-            .unionByName(deltas)
-            .groupBy("a", "b").agg(F.sum("n").alias("n"))
-            .where(F.col("n") > 0)
-            .localCheckpoint(eager=True)
-        )
-        nxt_words = (words.select(
-            "cnt", _bpe_merge_fold(a, b).alias("syms"))
-            .localCheckpoint(eager=True))
-        pairs.unpersist()
-        words.unpersist()
-        pairs, words = nxt_pairs, nxt_words
-    words.unpersist()
-    if pairs is not None:
-        pairs.unpersist()
-    return merges
+    with staged() as st:
+        words = st.checkpoint(  # corpus pass paid once, here
+            df.select(F.explode(F.expr(toks)).alias("w"))
+            .where(F.col("w") != "")
+            .groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
+            .withColumn("syms", F.expr(
+                "transform(sequence(1, char_length(w)),"
+                " i -> substring(w, i, 1))"))
+            .select("cnt", "syms"))
+        if strategy == "driver":
+            probe = words.limit(max_driver_words + 1).count()
+            if probe > max_driver_words:
+                raise ValueError(
+                    f"bpe_train(strategy='driver') collects the "
+                    f"word-frequency table and the corpus has more than "
+                    f"{max_driver_words} distinct words. Raise "
+                    f"max_driver_words explicitly, train on a cleaned "
+                    f"corpus, or use strategy='delta'.")
+            table = [(int(r["cnt"]), list(r["syms"])) for r in words.collect()]
+            st.release(words)
+            return _bpe_train_driver(table, n_merges, min_pair_count)
+        merges: list[tuple[str, str, int]] = []
+        pairs = None
+        if strategy == "delta":
+            pairs = st.checkpoint(_bpe_pair_counts(words, F.col("cnt")))
+        for _ in range(n_merges):
+            src = pairs if pairs is not None else \
+                _bpe_pair_counts(words, F.col("cnt"))
+            top = (
+                src.orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
+                .limit(1)
+                .collect()  # exactly one row of driver state per iteration
+            )
+            if not top or top[0]["n"] < min_pair_count:
+                break
+            a, b, n = top[0]["a"], top[0]["b"], int(top[0]["n"])
+            merges.append((a, b, n))
+            if pairs is None:
+                nxt = st.checkpoint(  # cut the fold lineage
+                    words.select("cnt", _bpe_merge_fold(a, b).alias("syms")))
+                st.release(words)
+                words = nxt
+                continue
+            # delta path. The word-table update is the same single fold-all
+            # scan as "full" (the fold is the identity on non-carriers); the
+            # saving is the pair-count side: signed deltas explode from ONLY
+            # the carrier words — one filtered scan whose shuffle carries a
+            # sliver of the pair occurrences instead of all of them.
+            has = F.exists(
+                F.expr(_BPE_ZIP),
+                lambda p: (p["a"] == F.lit(a)) & (p["b"] == F.lit(b)))
+            both = words.where(has).select(
+                "cnt", F.col("syms").alias("syms_old"),
+                _bpe_merge_fold(a, b).alias("syms_new"))
+            signed = (
+                f"concat(transform({_bpe_zip('syms_old')},"
+                f" p -> struct(p.a AS a, p.b AS b,"
+                f" CAST(-cnt AS BIGINT) AS n)),"
+                f" transform({_bpe_zip('syms_new')},"
+                f" p -> struct(p.a AS a, p.b AS b,"
+                f" CAST(cnt AS BIGINT) AS n)))"
+            )
+            deltas = (both.select(F.explode(F.expr(signed)).alias("d"))
+                      .select("d.a", "d.b", "d.n"))
+            nxt_pairs = st.checkpoint(
+                pairs.select("a", "b", F.col("n").cast("bigint").alias("n"))
+                .unionByName(deltas)
+                .groupBy("a", "b").agg(F.sum("n").alias("n"))
+                .where(F.col("n") > 0))
+            nxt_words = st.checkpoint(words.select(
+                "cnt", _bpe_merge_fold(a, b).alias("syms")))
+            st.release(pairs)
+            st.release(words)
+            pairs, words = nxt_pairs, nxt_words
+        return merges
 
 
 def bpe_segment(df: DataFrame, id_col: str, text_col: str,

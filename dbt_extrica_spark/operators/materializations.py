@@ -24,6 +24,7 @@ from typing import TYPE_CHECKING
 from ..catalog import properties_clause, table_clauses  # noqa: F401 (re-exported A25 helper)
 from ..errors import CompilationError, DatabaseError
 from ..relation import Relation, RelationType
+from ..staging import Stage
 from . import merge as merge_ops
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -328,7 +329,7 @@ def materialize_incremental(engine: "Engine", model: "Model",
             f"CREATE TABLE {tmp.render()} USING PARQUET AS {sql}"
         )
 
-    staged = None
+    st = Stage()
     try:
         engine.catalog.expand_target_column_types(tmp, target)
         dest_columns = process_schema_changes(engine, on_schema_change, tmp, target)
@@ -342,18 +343,17 @@ def materialize_incremental(engine: "Engine", model: "Model",
         # join arm of the merge rewrite, the partition-scope probes. Only
         # the merge strategy re-evaluates a view-typed batch; append and
         # insert_overwrite evaluate it once and delete+insert already
-        # materializes a tmp TABLE. Paired unpersist in the finally below.
+        # materializes a tmp TABLE. Released in the finally below.
         src_df = engine.spark.table(tmp.render_unquoted())
         if ttype == "view" and strategy == "merge" and unique_key:
             from pyspark.sql import functions as _F
 
-            ck = src_df.localCheckpoint(eager=False)
+            ck = st.checkpoint(src_df, eager=False)
             if ck.count() <= _STAGE_BCAST_ROW_CAP:  # count materializes ck
                 src_df = _F.broadcast(ck)
             else:
-                staged = ck.persist()
-                staged.count()
-                src_df = staged
+                src_df = st.cache(ck)
+                src_df.count()
         tgt_df = engine.spark.table(target.render_unquoted())
 
         scoped = bool(partition_by) and all(
@@ -433,8 +433,7 @@ def materialize_incremental(engine: "Engine", model: "Model",
                 )
                 engine.overwrite_table_atomic(target, result)
     finally:
-        if staged is not None:
-            staged.unpersist()
+        st.close()
         tmp_existing = engine.catalog.get_relation(tmp)
         if tmp_existing is not None:
             engine.catalog.drop_relation(tmp_existing)

@@ -23,6 +23,7 @@ import threading
 from pyspark.sql import DataFrame, functions as F
 
 from ..errors import DatabaseError
+from ..staging import staged
 
 SOURCE_ALIAS = "DBT_INTERNAL_SOURCE"
 DEST_ALIAS = "DBT_INTERNAL_DEST"
@@ -262,32 +263,31 @@ def partition_scoped_overwrite(
         affected = affected.unionByName(
             extra_affected.select(*partition_cols).distinct()
         ).distinct()
-    affected = affected.persist()
-    # a USING-style join reorders the key columns to the front; restore the
-    # table's column order — the dynamic-overwrite insertInto below is
-    # POSITIONAL
-    tgt_scope = tgt_df.join(F.broadcast(affected), on=partition_cols,
-                            how="left_semi").select(*tgt_df.columns)
-    final_scope = rewrite(tgt_scope).select(*tgt_df.columns)
+    with staged() as st:
+        affected = st.cache(affected)
+        # a USING-style join reorders the key columns to the front; restore
+        # the table's column order — the dynamic-overwrite insertInto below
+        # is POSITIONAL
+        tgt_scope = tgt_df.join(F.broadcast(affected), on=partition_cols,
+                                how="left_semi").select(*tgt_df.columns)
+        final_scope = rewrite(tgt_scope).select(*tgt_df.columns)
 
-    emptied = [
-        r.asDict() for r in
-        affected.join(
-            final_scope.select(*partition_cols).distinct(),
-            on=partition_cols, how="left_anti",
-        ).collect()
-    ]
+        emptied = [
+            r.asDict() for r in
+            affected.join(
+                final_scope.select(*partition_cols).distinct(),
+                on=partition_cols, how="left_anti",
+            ).collect()
+        ]
 
-    dynamic_overwrite_insert(spark, target.render_unquoted(), final_scope)
-    for part in emptied:
-        clause = ", ".join(
-            "`%s` = '%s'" % (k, str(v).replace("'", "''"))
-            for k, v in part.items()
-        )
-        spark.sql(
-            f"ALTER TABLE {target.render()} DROP IF EXISTS PARTITION ({clause})"
-        )
-    affected.unpersist()
+        dynamic_overwrite_insert(spark, target.render_unquoted(), final_scope)
+        for part in emptied:
+            clause = ", ".join(
+                "`%s` = '%s'" % (k, str(v).replace("'", "''"))
+                for k, v in part.items()
+            )
+            spark.sql(f"ALTER TABLE {target.render()} "
+                      f"DROP IF EXISTS PARTITION ({clause})")
 
 
 def get_merge_update_columns(

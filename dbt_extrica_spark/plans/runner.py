@@ -43,6 +43,7 @@ def run_project(engine: "Engine", project: "Project", threads: int = 4,
             return name, rel
         finally:
             sc.setLocalProperty("spark.scheduler.pool", None)
+            sc._jsc.clearJobGroup()
 
     for level in project.topo_order():
         level = [n for n in level if n in chosen]

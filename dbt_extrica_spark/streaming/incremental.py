@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..sources.registry import _nanos_columns, normalize_ntz, read_parquet_table
+from ..staging import staged
 
 
 def _read_file_stream(spark: SparkSession, sf_dir: str,
@@ -437,30 +438,31 @@ def _cdc_apply_callback(engine, table_name: str, unique_key,
         fresh_w = (winners.join(stored, on=keys, how="left")
                    .where(F.col("__old_seq").isNull()
                           | (F.col("__cdc_seq") > F.col("__old_seq"))))
-        if tombstones:
-            # materialize the applied winners BEFORE any overwrite:
-            # both table writes below are staged lazily, and fresh_w
-            # reads the OLD tombstone table — without the checkpoint
-            # the target's staging write would re-derive it AFTER the
-            # tombstone swap and filter against the wrong stored seqs
-            fresh_w = fresh_w.localCheckpoint(eager=True)
-        kept = tgt_df.join(fresh_w.select(*keys), on=keys,
-                           how="left_anti")
-        upserts = (fresh_w.where(F.col("__rk") < 2)
-                   .select(*cols, "__cdc_seq"))
-        if tombstones:
-            # applied winners replace the key's tombstone: a delete
-            # writes a new one, an upsert clears it (reincarnation)
-            kept_ts = ts_df.join(fresh_w.select(*keys), on=keys,
-                                 how="left_anti")
-            new_ts = (fresh_w.where(F.col("__rk") == 2)
-                      .select(*keys, "__cdc_seq",
-                              F.lit(int(batch_id)).cast("bigint")
-                              .alias("__cdc_batch")))
+        with staged() as st:
+            if tombstones:
+                # materialize the applied winners BEFORE any overwrite:
+                # both table writes below are staged lazily, and fresh_w
+                # reads the OLD tombstone table — without the checkpoint
+                # the target's staging write would re-derive it AFTER the
+                # tombstone swap and filter against the wrong stored seqs
+                fresh_w = st.checkpoint(fresh_w)
+            kept = tgt_df.join(fresh_w.select(*keys), on=keys,
+                               how="left_anti")
+            upserts = (fresh_w.where(F.col("__rk") < 2)
+                       .select(*cols, "__cdc_seq"))
+            if tombstones:
+                # applied winners replace the key's tombstone: a delete
+                # writes a new one, an upsert clears it (reincarnation)
+                kept_ts = ts_df.join(fresh_w.select(*keys), on=keys,
+                                     how="left_anti")
+                new_ts = (fresh_w.where(F.col("__rk") == 2)
+                          .select(*keys, "__cdc_seq",
+                                  F.lit(int(batch_id)).cast("bigint")
+                                  .alias("__cdc_batch")))
+                engine.overwrite_table_atomic(
+                    ts_target, kept_ts.unionByName(new_ts))
             engine.overwrite_table_atomic(
-                ts_target, kept_ts.unionByName(new_ts))
-        engine.overwrite_table_atomic(
-            target, kept.select(*cols, "__cdc_seq").unionByName(upserts))
+                target, kept.select(*cols, "__cdc_seq").unionByName(upserts))
 
     return apply_batch
 
@@ -798,107 +800,99 @@ def streaming_minhash_admission(
     }
 
     def admit(batch_df: DataFrame, batch_id: int) -> None:
-        batch = (batch_df.select(F.col(id_col), F.col(text_col))
-                 .localCheckpoint(eager=True))
-        if not batch.take(1):
-            return
-        # ONE band table per batch, probed twice (vs the history index for
-        # cross dups, vs itself for intra dups) — the batch is shingled
-        # once for banding and once more only for candidate verification
-        bb = dedup_ops.minhash_band_table(
-            batch, id_col, text_col, k=k, num_perm=num_perm,
-            bands=bands).persist()
-        # broadcast the (small) batch band table: the growing history
-        # index streams through the probe join without a shuffle, so
-        # per-batch shuffle cost stays O(batch) as the index grows
-        cross_cand = (
-            F.broadcast(bb).alias("a").join(
-                state["bands"].alias("b"),
-                on=[F.col("a.band") == F.col("b.band"),
-                    F.col("a.bh") == F.col("b.bh")])
-            .select(F.col("a.id").alias("id_new"),
-                    F.col("b.id").alias("id_hist"))
-            .dropDuplicates(["id_new", "id_hist"]).persist()
-        )
-        intra_cand = (
-            bb.alias("a").join(
-                bb.alias("b"),
-                on=[F.col("a.band") == F.col("b.band"),
-                    F.col("a.bh") == F.col("b.bh"),
-                    F.col("a.id") < F.col("b.id")])
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"]).persist()
-        )
-        bids = (
-            cross_cand.select(F.col("id_new").alias("cid"))
-            .unionByName(intra_cand.select(F.col("id_a").alias("cid")))
-            .unionByName(intra_cand.select(F.col("id_b").alias("cid")))
-            .distinct()
-        )
-        sh_b = (
-            batch.join(F.broadcast(bids),
-                       batch[id_col] == F.col("cid"), "left_semi")
-            .select(F.col(id_col).alias("sid"),
-                    dedup_ops.char_shingles(text_col, k).alias("sh"))
-            .persist()
-        )
-        sh_h = (
-            state["hist"].join(
-                F.broadcast(cross_cand.select("id_hist").distinct()),
-                state["hist"][id_col] == F.col("id_hist"), "left_semi")
-            .select(F.col(id_col).alias("sid"),
-                    dedup_ops.char_shingles(text_col, k).alias("sh"))
-        )
+        with staged() as st:
+            batch = st.checkpoint(
+                batch_df.select(F.col(id_col), F.col(text_col)))
+            if not batch.take(1):
+                return
+            # ONE band table per batch, probed twice (vs the history index for
+            # cross dups, vs itself for intra dups) — the batch is shingled
+            # once for banding and once more only for candidate verification
+            bb = st.cache(dedup_ops.minhash_band_table(
+                batch, id_col, text_col, k=k, num_perm=num_perm, bands=bands))
+            # broadcast the (small) batch band table: the growing history
+            # index streams through the probe join without a shuffle, so
+            # per-batch shuffle cost stays O(batch) as the index grows
+            cross_cand = st.cache(
+                F.broadcast(bb).alias("a").join(
+                    state["bands"].alias("b"),
+                    on=[F.col("a.band") == F.col("b.band"),
+                        F.col("a.bh") == F.col("b.bh")])
+                .select(F.col("a.id").alias("id_new"),
+                        F.col("b.id").alias("id_hist"))
+                .dropDuplicates(["id_new", "id_hist"]))
+            intra_cand = st.cache(
+                bb.alias("a").join(
+                    bb.alias("b"),
+                    on=[F.col("a.band") == F.col("b.band"),
+                        F.col("a.bh") == F.col("b.bh"),
+                        F.col("a.id") < F.col("b.id")])
+                .select(F.col("a.id").alias("id_a"),
+                        F.col("b.id").alias("id_b"))
+                .dropDuplicates(["id_a", "id_b"]))
+            bids = (
+                cross_cand.select(F.col("id_new").alias("cid"))
+                .unionByName(intra_cand.select(F.col("id_a").alias("cid")))
+                .unionByName(intra_cand.select(F.col("id_b").alias("cid")))
+                .distinct()
+            )
+            sh_b = st.cache(
+                batch.join(F.broadcast(bids),
+                           batch[id_col] == F.col("cid"), "left_semi")
+                .select(F.col(id_col).alias("sid"),
+                        dedup_ops.char_shingles(text_col, k).alias("sh")))
+            sh_h = (
+                state["hist"].join(
+                    F.broadcast(cross_cand.select("id_hist").distinct()),
+                    state["hist"][id_col] == F.col("id_hist"), "left_semi")
+                .select(F.col(id_col).alias("sid"),
+                        dedup_ops.char_shingles(text_col, k).alias("sh"))
+            )
 
-        def jac(a, b):
-            return (F.size(F.array_intersect(a, b))
-                    / F.size(F.array_union(a, b))).cast("double")
+            def jac(a, b):
+                return (F.size(F.array_intersect(a, b))
+                        / F.size(F.array_union(a, b))).cast("double")
 
-        dropped_new = (
-            cross_cand
-            .join(sh_b.withColumnRenamed("sh", "sh_a"),
-                  cross_cand.id_new == F.col("sid")).drop("sid")
-            .join(sh_h.withColumnRenamed("sh", "sh_b"),
-                  cross_cand.id_hist == F.col("sid")).drop("sid")
-            .where(jac(F.col("sh_a"), F.col("sh_b")) >= threshold)
-            .select(F.col("id_new").alias(id_col)).distinct()
-        )
-        kept_ids = (batch.select(id_col)
-                    .join(dropped_new, on=id_col, how="left_anti"))
-        dropped_intra = (
-            intra_cand
-            .join(kept_ids.withColumnRenamed(id_col, "id_a"), on="id_a")
-            .join(kept_ids.withColumnRenamed(id_col, "id_b"), on="id_b")
-            .join(sh_b.withColumnRenamed("sh", "sh_a"),
-                  F.col("id_a") == F.col("sid")).drop("sid")
-            .join(sh_b.withColumnRenamed("sh", "sh_b"),
-                  F.col("id_b") == F.col("sid")).drop("sid")
-            .where(jac(F.col("sh_a"), F.col("sh_b")) >= threshold)
-            .select(F.col("id_b").alias(id_col)).distinct()
-        )
-        kept = (
-            batch.join(kept_ids, on=id_col, how="left_semi")
-            .join(dropped_intra, on=id_col, how="left_anti")
-            .localCheckpoint(eager=True)
-        )
-        # the admitted docs' band rows are a SLICE of the already-computed
-        # batch band table — reuse it (materialized before bb is released)
-        # instead of re-shingling the admitted text a third time
-        kept_bands = (
-            bb.join(kept.select(F.col(id_col).alias("id")),
-                    on="id", how="left_semi")
-            .localCheckpoint(eager=True)
-        )
-        for h in (bb, cross_cand, intra_cand, sh_b):
-            h.unpersist()
-        state["admitted"].append(kept)
-        state["hist"] = (state["hist"].unionByName(kept)
-                         .localCheckpoint(eager=False))
-        state["bands"] = (state["bands"].unionByName(kept_bands)
-                         .localCheckpoint(eager=False))
-        # the batch's eager checkpoint is superseded by kept/kept_bands:
-        # free its blocks now rather than on driver GC
-        dedup_ops.release_local_checkpoint(batch)
+            dropped_new = (
+                cross_cand
+                .join(sh_b.withColumnRenamed("sh", "sh_a"),
+                      cross_cand.id_new == F.col("sid")).drop("sid")
+                .join(sh_h.withColumnRenamed("sh", "sh_b"),
+                      cross_cand.id_hist == F.col("sid")).drop("sid")
+                .where(jac(F.col("sh_a"), F.col("sh_b")) >= threshold)
+                .select(F.col("id_new").alias(id_col)).distinct()
+            )
+            kept_ids = (batch.select(id_col)
+                        .join(dropped_new, on=id_col, how="left_anti"))
+            dropped_intra = (
+                intra_cand
+                .join(kept_ids.withColumnRenamed(id_col, "id_a"), on="id_a")
+                .join(kept_ids.withColumnRenamed(id_col, "id_b"), on="id_b")
+                .join(sh_b.withColumnRenamed("sh", "sh_a"),
+                      F.col("id_a") == F.col("sid")).drop("sid")
+                .join(sh_b.withColumnRenamed("sh", "sh_b"),
+                      F.col("id_b") == F.col("sid")).drop("sid")
+                .where(jac(F.col("sh_a"), F.col("sh_b")) >= threshold)
+                .select(F.col("id_b").alias(id_col)).distinct()
+            )
+            kept = (
+                batch.join(kept_ids, on=id_col, how="left_semi")
+                .join(dropped_intra, on=id_col, how="left_anti")
+                .localCheckpoint(eager=True)
+            )
+            # the admitted docs' band rows are a SLICE of the already-computed
+            # batch band table — reuse it (materialized before bb is released)
+            # instead of re-shingling the admitted text a third time
+            kept_bands = (
+                bb.join(kept.select(F.col(id_col).alias("id")),
+                        on="id", how="left_semi")
+                .localCheckpoint(eager=True)
+            )
+            state["admitted"].append(kept)
+            state["hist"] = (state["hist"].unionByName(kept)
+                             .localCheckpoint(eager=False))
+            state["bands"] = (state["bands"].unionByName(kept_bands)
+                             .localCheckpoint(eager=False))
 
     # an availableNow catch-up needs no durable checkpoint — use a fresh
     # tempdir (honors TMPDIR; /tmp may be wrong on shared/diskless hosts)
@@ -988,44 +982,39 @@ def streaming_vector_admission(
                          F.expr(nrm).alias("nrm")).alias(alias)
 
     def admit(batch_df: DataFrame, batch_id: int) -> None:
-        batch = (batch_df.select(F.col(id_col), F.col(vec_col))
-                 .localCheckpoint(eager=True))
-        if not batch.take(1):
-            return
-        if exact:
-            b = _norm_side(batch, "b")
-            h = _norm_side(state["hist"], "h")
-            cross_dropped = (
-                F.broadcast(b).join(h, on=F.expr(
-                    f"{dot} / (b.nrm * h.nrm) >= {threshold!r}D"))
-                .select(F.col("b.id").alias(id_col)).distinct()
-            )
-        else:
-            cross_dropped = (
-                sim_ops.cross_cosine_pairs(
-                    batch, state["hist"], id_col, vec_col,
-                    threshold=threshold, n_cells=n_cells, nprobe=nprobe)
-                .select(F.col("new_id").alias(id_col)).distinct()
-            )
-        kept1 = batch.join(cross_dropped, on=id_col, how="left_anti") \
-            .localCheckpoint(eager=True)
-        # intra-batch among cross-survivors: exact pairs, higher id drops
-        from ..extensions import dedup as dedup_ops
+        with staged() as st:
+            batch = st.checkpoint(
+                batch_df.select(F.col(id_col), F.col(vec_col)))
+            if not batch.take(1):
+                return
+            if exact:
+                b = _norm_side(batch, "b")
+                h = _norm_side(state["hist"], "h")
+                cross_dropped = (
+                    F.broadcast(b).join(h, on=F.expr(
+                        f"{dot} / (b.nrm * h.nrm) >= {threshold!r}D"))
+                    .select(F.col("b.id").alias(id_col)).distinct()
+                )
+            else:
+                cross_dropped = (
+                    sim_ops.cross_cosine_pairs(
+                        batch, state["hist"], id_col, vec_col,
+                        threshold=threshold, n_cells=n_cells, nprobe=nprobe)
+                    .select(F.col("new_id").alias(id_col)).distinct()
+                )
+            kept1 = st.checkpoint(
+                batch.join(cross_dropped, on=id_col, how="left_anti"))
+            # intra-batch among cross-survivors: exact pairs, higher id drops
+            from ..extensions import dedup as dedup_ops
 
-        pairs = dedup_ops.embedding_cosine_pairs(
-            kept1, id_col, vec_col, threshold=threshold)
-        dropped_b = pairs.select(F.col("id_b").alias(id_col)).distinct()
-        kept = kept1.join(dropped_b, on=id_col, how="left_anti") \
-            .localCheckpoint(eager=True)
-        state["admitted"].append(kept)
-        state["hist"] = (state["hist"].unionByName(kept)
-                         .localCheckpoint(eager=False))
-        # batch and kept1 are fully superseded by kept: release their
-        # eager-checkpoint blocks now instead of waiting on driver GC
-        # (the warm-session residue class release_local_checkpoint
-        # documents)
-        dedup_ops.release_local_checkpoint(kept1)
-        dedup_ops.release_local_checkpoint(batch)
+            pairs = dedup_ops.embedding_cosine_pairs(
+                kept1, id_col, vec_col, threshold=threshold)
+            dropped_b = pairs.select(F.col("id_b").alias(id_col)).distinct()
+            kept = kept1.join(dropped_b, on=id_col, how="left_anti") \
+                .localCheckpoint(eager=True)
+            state["admitted"].append(kept)
+            state["hist"] = (state["hist"].unionByName(kept)
+                             .localCheckpoint(eager=False))
 
     ckpt = tempfile.mkdtemp(prefix="spark_vec_admission_")
     try:

@@ -192,6 +192,31 @@ def test_swap_fault_leaves_old_or_new_rows(engine, monkeypatch, fault,
     assert _rows(engine, "ft") == new and _leftovers(engine) == []
 
 
+def test_rebuild_describes_target_once(engine, monkeypatch):
+    """One overwrite describes the target for its layout and the stage for
+    its partitioning: two DESCRIBE ... AS JSON calls, not three."""
+    from dbt_extrica_spark.catalog import CatalogClient
+
+    cfg = {"materialized": "table", "partition_by": ["p"]}
+    engine.materialize(Model("described", config=cfg, sql=(
+        "SELECT id, id % 3 AS p FROM range(9)")))
+    seen = []
+    real = CatalogClient.describe_table
+
+    def counting(self, relation):
+        seen.append(relation.identifier)
+        return real(self, relation)
+
+    monkeypatch.setattr(CatalogClient, "describe_table", counting)
+    engine.overwrite_table_atomic(
+        engine.relation("described"),
+        engine.sql("SELECT id, id % 3 AS p FROM range(12)"))
+    assert len(seen) == 2 and seen[0] == "described"
+    assert re.search(r"__stg_[0-9a-f]+$", seen[1])
+    assert len(_rows(engine, "described")) == 12
+    assert _leftovers(engine) == []
+
+
 def test_swap_fault_at_stage_build_keeps_old_table(engine):
     target = engine.relation("fs")
     engine.sql(f"CREATE TABLE {target.render()} USING parquet AS "

@@ -64,6 +64,26 @@ def test_job_group_cancellation_scaffold(spark):
     mgr.cancel("grp1")  # no-op on a finished group; must not raise
 
 
+def test_job_groups_are_cleared_after_each_call(engine):
+    """A job group left on the calling thread would tag its later jobs, so
+    a cancelJobGroup aimed at the finished model could kill them."""
+    from dbt_extrica_spark.connections import ExecutionManager
+    from dbt_extrica_spark.plans.model import Project
+    from dbt_extrica_spark.plans.runner import run_project
+
+    sc = engine.spark.sparkContext
+    mgr = ExecutionManager(engine.spark)
+    mgr.run_in_job_group("grp2", lambda: engine.sql("SELECT 1").collect())
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+    with pytest.raises(ZeroDivisionError):
+        mgr.run_in_job_group("grp3", lambda: 1 / 0)
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+    # a one-model level runs on the calling thread
+    run_project(engine, Project([Model("jg_one", sql="SELECT 1 AS x")]))
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+    assert sc.getLocalProperty("spark.job.description") is None
+
+
 def test_data_quality_checks(engine):
     from dbt_extrica_spark import testing
 

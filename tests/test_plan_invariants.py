@@ -29,7 +29,7 @@ Deliberately NOT covered here: the checkpoint-heavy pipelines
 multimodal_*, streaming_*) return POST-execution plans (LogicalRDD /
 ExistingRDD leaves) whose interesting stages already executed — their
 anti-pattern coverage is plan_lint over the full battery, and their cost
-posture is the scale probes in NEXT.md.
+posture is the scale floors in NEXT.md.
 """
 
 from __future__ import annotations

@@ -66,7 +66,6 @@ def main() -> None:
             .groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()
         }
         split_wall = time.time() - t0
-        dedup.release_local_checkpoint(comp)
         out["probes"].append({
             "factor": factor,
             "pairs": n_nodes - n_chains,
