@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from .column import Column
 from .errors import CompilationError, DatabaseError
 from .relation import Relation, RelationType
+from .session import local_frame
 
 MAX_COLUMNS = 10_000  # reference: macros/adapters.sql:12-19
 _UNDESCRIBED = object()  # swap_in: describe the target itself
@@ -68,8 +69,10 @@ class CatalogClient:
 
     # -- schemas (A16, A19) --------------------------------------------------
     def list_schemas(self) -> list[str]:
-        """Reference: macros/adapters.sql:214-222 (information_schema.schemata)."""
-        return [db.name for db in self.spark.catalog.listDatabases()]
+        """Reference: macros/adapters.sql:214-222 (information_schema.schemata).
+        ``SHOW DATABASES`` runs no Spark job (``catalog.listDatabases``
+        iterates its result with jobs)."""
+        return [r.namespace for r in self.spark.sql("SHOW DATABASES").collect()]
 
     def check_schema_exists(self, schema: str) -> bool:
         """Reference: macros/adapters.sql:224-231."""
@@ -106,22 +109,28 @@ class CatalogClient:
 
     def list_relations_without_caching(self, schema: str) -> list[Relation]:
         """A15 — reference: macros/adapters.sql:29-49 (information_schema.tables
-        LEFT JOIN system.metadata.materialized_views); ours: listTables + the
-        MV registry."""
+        LEFT JOIN system.metadata.materialized_views); ours: ``SHOW TABLES``
+        typed by ``SHOW VIEWS`` and the MV registry. Neither statement runs
+        a Spark job (``catalog.listTables`` iterates its result with
+        jobs)."""
         schema = schema.lower()
         if not self.check_schema_exists(schema):
             return []
+
+        def names(what: str) -> list[str]:  # (namespace, name, isTemporary)
+            return [r[1] for r in self.spark.sql(
+                f"SHOW {what} IN `{schema}`").collect() if not r.isTemporary]
+
+        views = set(names("VIEWS"))
         out = []
-        for t in self.spark.catalog.listTables(schema):
-            if t.isTemporary:
-                continue
-            if (schema, t.name.lower()) in self.mv_definitions:
+        for name in names("TABLES"):
+            if (schema, name.lower()) in self.mv_definitions:
                 rtype = RelationType.MaterializedView
-            elif t.tableType == "VIEW":
+            elif name in views:
                 rtype = RelationType.View
             else:
                 rtype = RelationType.Table
-            out.append(Relation(t.name, schema=schema, type=rtype))
+            out.append(Relation(name, schema=schema, type=rtype))
         return out
 
     def drop_relation(self, relation: Relation) -> None:
@@ -481,23 +490,22 @@ class CatalogClient:
             pass
 
     # -- full catalog (A17) -------------------------------------------------------
-    CATALOG_COLUMNS = (
-        "table_database", "table_schema", "table_name", "table_type",
-        "table_comment", "column_name", "column_index", "column_type",
-        "column_comment", "table_owner",
-    )
-
     def get_catalog(self, schemas: list[str]) -> DataFrame:
         """A17 — one row per column across the requested schemas, same output
-        columns and ordering as reference: macros/catalog.sql:124-140."""
-        relations = []
-        for s in schemas:
-            relations.extend(self.list_relations_without_caching(s))
-        return self.get_catalog_relations(relations)
+        columns and ordering as reference: macros/catalog.sql:124-140. The
+        frame holds ``catalog_rows``: collecting it runs no Spark job."""
+        return local_frame(self.spark, self.catalog_rows(schemas), (
+            "table_database string, table_schema string, table_name string,"
+            " table_type string, table_comment string, column_name string,"
+            " column_index int, column_type string, column_comment string,"
+            " table_owner string"))
 
-    def get_catalog_relations(self, relations: list[Relation]) -> DataFrame:
+    def catalog_rows(self, schemas: list[str]) -> list[Row]:
+        """get_catalog's rows from catalog metadata alone, sorted by schema,
+        table name and column index."""
         rows: list[Row] = []
-        for rel in relations:
+        for rel in [r for s in schemas
+                    for r in self.list_relations_without_caching(s)]:
             comment = None
             try:
                 comment = self.get_relation_comment(rel)
@@ -522,11 +530,5 @@ class CatalogClient:
                     table_owner=None,
                 ))
                 idx += 1
-        schema = ("table_database string, table_schema string, table_name string,"
-                  " table_type string, table_comment string, column_name string,"
-                  " column_index int, column_type string, column_comment string,"
-                  " table_owner string")
-        df = self.spark.createDataFrame(rows, schema=schema) if rows else (
-            self.spark.createDataFrame([], schema=schema)
-        )
-        return df.orderBy("table_schema", "table_name", "column_index")
+        return sorted(rows, key=lambda r: (r.table_schema, r.table_name,
+                                           r.column_index))

@@ -322,11 +322,12 @@ class Engine:
     # ------------------------------------------------------------------
     def generate_docs(self) -> dict:
         """Catalog document for this engine's schema: one entry per relation
-        with type, comment, and ordered columns (built from get_catalog,
-        which mirrors the reference's catalog query output columns,
-        reference: macros/catalog.sql:124-140)."""
+        with type, comment, and ordered columns (built from get_catalog's
+        rows, which mirror the reference's catalog query output columns,
+        reference: macros/catalog.sql:124-140). Catalog metadata only: no
+        Spark job."""
         out: dict = {"schema": self.schema, "relations": {}}
-        for row in self.catalog.get_catalog([self.schema]).collect():
+        for row in self.catalog.catalog_rows([self.schema]):
             rel = out["relations"].setdefault(row.table_name, {
                 "type": row.table_type,
                 "comment": row.table_comment,

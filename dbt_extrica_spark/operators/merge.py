@@ -20,10 +20,11 @@ from __future__ import annotations
 
 import threading
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql.types import StructType
 
 from ..errors import DatabaseError
-from ..staging import staged
+from ..session import local_frame
 
 SOURCE_ALIAS = "DBT_INTERNAL_SOURCE"
 DEST_ALIAS = "DBT_INTERNAL_DEST"
@@ -254,40 +255,55 @@ def partition_scoped_overwrite(
     - commit via dynamic partition overwrite (only partitions present in the
       result are replaced)
     - partitions whose final content is EMPTY are dropped explicitly —
-      dynamic overwrite cannot clear a partition it writes no rows to.
+      dynamic overwrite cannot clear a partition it writes no rows to. The
+      written partitions are observed on the write (a ``collect_set`` of
+      partition tuples, bounded by the affected set), not probed by a
+      second run of the rewrite.
+
+    The affected set is collected to the driver: one row per partition,
+    which bounds it by the table's partition count, not its size.
     """
     spark = engine.spark
     tgt_df = spark.table(target.render_unquoted())
-    affected = src_df.select(*partition_cols).distinct()
+    as_target = [F.col(c).cast(tgt_df.schema[c].dataType).alias(c)
+                 for c in partition_cols]
+    affected = src_df.select(*partition_cols)
     if extra_affected is not None:
         affected = affected.unionByName(
-            extra_affected.select(*partition_cols).distinct()
-        ).distinct()
-    with staged() as st:
-        affected = st.cache(affected)
-        # a USING-style join reorders the key columns to the front; restore
-        # the table's column order — the dynamic-overwrite insertInto below
-        # is POSITIONAL
-        tgt_scope = tgt_df.join(F.broadcast(affected), on=partition_cols,
-                                how="left_semi").select(*tgt_df.columns)
-        final_scope = rewrite(tgt_scope).select(*tgt_df.columns)
-
-        emptied = [
-            r.asDict() for r in
-            affected.join(
-                final_scope.select(*partition_cols).distinct(),
-                on=partition_cols, how="left_anti",
-            ).collect()
-        ]
-
-        dynamic_overwrite_insert(spark, target.render_unquoted(), final_scope)
-        for part in emptied:
-            clause = ", ".join(
-                "`%s` = '%s'" % (k, str(v).replace("'", "''"))
-                for k, v in part.items()
-            )
-            spark.sql(f"ALTER TABLE {target.render()} "
-                      f"DROP IF EXISTS PARTITION ({clause})")
+            extra_affected.select(*partition_cols))
+    # Spark's own text for a partition tuple: the key the write's
+    # observation reports, and what a DROP PARTITION names; compared as
+    # text, never as values converted to and from Python
+    spec = F.struct(*[F.col(c).cast("string") for c in partition_cols])
+    # the affected partitions are computed once, before the write changes
+    # what they are computed from, and held on the driver
+    parts = affected.select(*as_target).distinct().select(
+        "*", spec.alias("__spec")).collect()
+    scope = local_frame(spark, [p[:-1] for p in parts], StructType(
+        [tgt_df.schema[c] for c in partition_cols]))
+    # a USING-style join reorders the key columns to the front; restore
+    # the table's column order — the dynamic-overwrite insertInto below
+    # is POSITIONAL
+    tgt_scope = tgt_df.join(F.broadcast(scope), on=partition_cols,
+                            how="left_semi").select(*tgt_df.columns)
+    final_scope = rewrite(tgt_scope).select(*tgt_df.columns)
+    # the write reports the partitions it wrote rows to, so the rewrite
+    # runs once; an affected partition it wrote none to is emptied
+    written = Observation()
+    dynamic_overwrite_insert(
+        spark, target.render_unquoted(),
+        final_scope.observe(written, F.collect_set(spec).alias("parts")))
+    kept = {tuple(p) for p in written.get.get("parts") or ()}
+    for part in parts:
+        values = tuple(part["__spec"])
+        if values in kept:
+            continue
+        clause = ", ".join(
+            "`%s` = '%s'" % (k, str(v).replace("'", "''"))
+            for k, v in zip(partition_cols, values)
+        )
+        spark.sql(f"ALTER TABLE {target.render()} "
+                  f"DROP IF EXISTS PARTITION ({clause})")
 
 
 def get_merge_update_columns(

@@ -9,14 +9,85 @@ fairly and can be cancelled individually (reference: connections.py:315-316).
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
-from typing import TYPE_CHECKING
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+from typing import TYPE_CHECKING, Callable
 
 from ..relation import Relation
+from ..session import local_frame
 
 if TYPE_CHECKING:  # pragma: no cover
     from ..engine import Engine
     from .model import Project
+
+
+def _in_model_group(engine: "Engine", name: str, fn: Callable[[], object]):
+    """Run ``fn`` with this thread's jobs in model ``name``'s scheduler pool
+    and job group, both cleared afterwards."""
+    sc = engine.spark.sparkContext
+    sc.setLocalProperty("spark.scheduler.pool", f"model_{name}")
+    sc.setJobGroup(f"model_{name}", f"dbt_extrica_spark model {name}",
+                   interruptOnCancel=True)
+    try:
+        return fn()
+    finally:
+        sc.setLocalProperty("spark.scheduler.pool", None)
+        sc._jsc.clearJobGroup()
+
+
+def _schedule(project: "Project", levels: list[list[str]], chosen: set[str],
+              step: Callable[[str], bool], threads: int) -> dict[str, list]:
+    """The dependency-driven scheduler behind run_project and build_project.
+
+    ``step(name)`` runs once per chosen model of ``levels`` (the
+    project's ``topo_order()``), as soon as every chosen
+    parent has finished with ``True``; with ``threads > 1`` independent
+    branches run concurrently on a pool of that size, with no barrier
+    between DAG levels. A model with a parent whose step returned ``False``
+    (or that was itself skipped) does not run. Returns ``{name: sorted
+    failed parents}`` for those skipped models. An exception from ``step``
+    stops further scheduling and propagates once the running steps finish;
+    the pool is shut down on every path."""
+    order = [n for level in levels for n in level if n in chosen]
+    deps = {n: project.model(n).refs() & chosen for n in order}
+    bad: set[str] = set()
+    skipped: dict[str, list] = {}
+
+    def skip_if_gated(name: str) -> bool:
+        if deps[name] & bad:
+            skipped[name] = sorted(deps[name] & bad)
+            bad.add(name)
+            return True
+        return False
+
+    if threads <= 1:
+        for name in order:
+            if not skip_if_gated(name) and not step(name):
+                bad.add(name)
+        return skipped
+
+    done: set[str] = set()
+    running: dict = {}
+    pool = ThreadPoolExecutor(max_workers=threads)
+    try:
+        while order or running:
+            # ``order`` is topological, so one pass also settles the
+            # children of a model skipped earlier in the same pass
+            for name in list(order):
+                if deps[name] <= done:
+                    order.remove(name)
+                    if skip_if_gated(name):
+                        done.add(name)
+                    else:
+                        running[pool.submit(step, name)] = name
+            finished, _ = wait(running, return_when=FIRST_COMPLETED)
+            for fut in finished:
+                name = running.pop(fut)
+                if not fut.result():
+                    bad.add(name)
+                done.add(name)
+    finally:
+        pool.shutdown(wait=True, cancel_futures=True)
+    return skipped
 
 
 def run_project(engine: "Engine", project: "Project", threads: int = 4,
@@ -24,37 +95,22 @@ def run_project(engine: "Engine", project: "Project", threads: int = 4,
                 select: list[str] | str | None = None,
                 exclude: list[str] | str | None = None
                 ) -> dict[str, Relation]:
-    """Execute every selected model, level-parallel per the dependency DAG.
+    """Execute every selected model in dependency order: a model starts as
+    soon as its parents are built, up to ``threads`` at a time.
     ``select``/``exclude`` take dbt node-selection specs (``name``,
     ``+name``, ``name+`` — Project.select_nodes); an unselected upstream
     is NOT rebuilt — refs resolve to its existing relation, exactly like
-    ``dbt run --select``."""
+    ``dbt run --select``. The first model that raises stops the run."""
     chosen = project.select_nodes(select, exclude)
     results: dict[str, Relation] = {}
 
-    def _run(name: str) -> tuple[str, Relation]:
-        model = project.model(name)
-        sc = engine.spark.sparkContext
-        sc.setLocalProperty("spark.scheduler.pool", f"model_{name}")
-        sc.setJobGroup(f"model_{name}", f"dbt_extrica_spark model {name}",
-                       interruptOnCancel=True)
-        try:
-            rel = engine.materialize(model, full_refresh=full_refresh)
-            return name, rel
-        finally:
-            sc.setLocalProperty("spark.scheduler.pool", None)
-            sc._jsc.clearJobGroup()
+    def step(name: str) -> bool:
+        results[name] = _in_model_group(engine, name, lambda: (
+            engine.materialize(project.model(name),
+                               full_refresh=full_refresh)))
+        return True
 
-    for level in project.topo_order():
-        level = [n for n in level if n in chosen]
-        if len(level) == 1 or threads <= 1:
-            for name in level:
-                n, rel = _run(name)
-                results[n] = rel
-        else:
-            with ThreadPoolExecutor(max_workers=threads) as pool:
-                for n, rel in pool.map(_run, level):
-                    results[n] = rel
+    _schedule(project, project.topo_order(), chosen, step, threads)
     return results
 
 
@@ -111,9 +167,12 @@ def build_project(engine: "Engine", project: "Project",
 
     Returns a report DataFrame (node_type, name, status, detail): statuses
     ``success`` / ``error`` / ``skip`` for build nodes, ``pass`` / ``warn``
-    / ``error`` for tests. Models within a DAG level still build
-    thread-parallel; tests run serially after the level completes so the
-    report order is deterministic.
+    / ``error`` for tests. Models are scheduled by dependency, not by DAG
+    level: a model starts once every selected parent has built and passed
+    its error-severity tests, and its own tests run on the same worker
+    right after it. The report is still in a fixed order: DAG level, then
+    name, each model followed by its tests (a level's skipped models
+    first). It is driver-local, so collecting it launches no Spark job.
     """
     from ..operators.seeds import seed as run_seed
     from ..operators.snapshot import snapshot as run_snapshot
@@ -126,7 +185,6 @@ def build_project(engine: "Engine", project: "Project",
         select = retry_selection(engine, project, retry_from) or []
     chosen = project.select_nodes(select, exclude)
     model_names = {m.name for m in project.models}
-    deps = {m.name: (m.refs() & model_names) for m in project.models}
 
     for s in seeds or []:
         try:
@@ -137,48 +195,42 @@ def build_project(engine: "Engine", project: "Project",
             rows.append(("seed", s["name"], "error", str(exc)[:500]))
             failed.add(s["name"])
 
-    def _build_one(name: str) -> tuple[str, str, str | None]:
+    built: dict[str, list[tuple]] = {}  # model -> its row, then its tests'
+
+    def build_and_test(name: str) -> list[tuple]:
         try:
             engine.materialize(project.model(name),
                                full_refresh=full_refresh)
-            return name, "success", None
         except Exception as exc:
-            return name, "error", str(exc)[:500]
-
-    for level in project.topo_order():
-        runnable = []
-        for name in level:
-            if name not in chosen:
-                continue
-            if deps[name] & failed:
-                rows.append(("model", name, "skip",
-                             "upstream failed: %s"
-                             % ", ".join(sorted(deps[name] & failed))))
-                failed.add(name)
-            else:
-                runnable.append(name)
-        if len(runnable) <= 1 or threads <= 1:
-            built = [_build_one(n) for n in runnable]
-        else:
-            with ThreadPoolExecutor(max_workers=threads) as pool:
-                built = list(pool.map(_build_one, runnable))
-        for name, status, detail in built:
-            rows.append(("model", name, status, detail))
-            if status == "error":
-                failed.add(name)
-                continue
-            specs = project.model(name).config.get("tests") or []
-            if not specs:
-                continue
+            return [("model", name, "error", str(exc)[:500])]
+        out = [("model", name, "success", None)]
+        specs = project.model(name).config.get("tests") or []
+        if specs:
             table = engine.relation(name).render_unquoted()
             report = run_checks(
                 engine.spark, [{**sp, "table": table} for sp in specs],
                 engine=engine)
-            for r in report.collect():
-                rows.append(("test", r.check, r.status,
-                             f"{r.violations} violations"))
-                if r.status == "error":
-                    failed.add(name)
+            out += [("test", r.check, r.status, f"{r.violations} violations")
+                    for r in report.collect()]
+        return out
+
+    def ok(name: str) -> bool:
+        return all(r[2] != "error" for r in built[name])
+
+    def step(name: str) -> bool:
+        built[name] = _in_model_group(engine, name,
+                                      lambda: build_and_test(name))
+        return ok(name)
+
+    levels = project.topo_order()
+    skipped = _schedule(project, levels, chosen, step, threads)
+    for level in levels:
+        # a level's skipped models are reported first, then its built ones
+        rows += [("model", n, "skip",
+                  "upstream failed: %s" % ", ".join(skipped[n]))
+                 for n in level if n in skipped]
+        rows += [r for n in level if n in built for r in built[n]]
+    failed |= set(skipped) | {n for n in built if not ok(n)}
 
     for spec in snapshots or []:
         src = spec["source_sql"]
@@ -206,5 +258,6 @@ def build_project(engine: "Engine", project: "Project",
         except Exception as exc:
             rows.append(("snapshot", spec["name"], "error", str(exc)[:500]))
 
-    return engine.spark.createDataFrame(
-        rows, "node_type string, name string, status string, detail string")
+    return local_frame(
+        engine.spark, rows,
+        "node_type string, name string, status string, detail string")

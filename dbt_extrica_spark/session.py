@@ -13,7 +13,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Configs safe to set on an existing session (runtime SQL confs).
 _RUNTIME_DEFAULTS: dict[str, str] = {
@@ -122,3 +122,33 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     return configure_session(spark, profile)
+
+
+def local_frame(spark: SparkSession, rows: list[tuple],
+                schema) -> DataFrame:
+    """A DataFrame over driver-local rows (``schema`` is a DDL string or a
+    StructType) that collects
+    without a Spark job, rows in the given order. It is built from an Arrow
+    table, a LocalRelation; ``createDataFrame(list)`` is an RDD scan
+    instead, one job per action. For small reports and metadata only.
+
+    TIMESTAMP values are read as PySpark returns them from ``collect``:
+    naive datetimes in the Python process's local time zone (aware ones
+    are exact), so collected rows round-trip unchanged."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import TimestampType, _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    arrays = []
+    for c, f in zip(cols, schema.fields):
+        if isinstance(f.dataType, TimestampType):
+            # PySpark's own conversion, the inverse of the one collect
+            # applies: microseconds since the epoch
+            c = [None if v is None else f.dataType.toInternal(v) for v in c]
+        arrays.append(pa.array(c, arrow.field(f.name).type))
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, schema=arrow), schema)

@@ -8,15 +8,20 @@ a (check, violations) report.
 
 All checks are single-scan aggregations or semi-joins — at 100 TB each is
 one shuffle at most (relationships is a broadcast/anti-join on the parent
-key set)."""
+key set). :func:`run_checks` goes further and answers every check on one
+table with one aggregation: one scan and one shuffle for all of them."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+
+from .session import local_frame
 
 
 def test_unique(spark: SparkSession, table: str, column: str) -> DataFrame:
-    """Rows = key values appearing more than once."""
+    """Rows = key values appearing more than once.
+    :func:`_violation_counts` counts these rows in its one query per table;
+    a change to this check's meaning is made there too."""
     return (
         spark.table(table)
         .where(F.col(column).isNotNull())
@@ -27,13 +32,17 @@ def test_unique(spark: SparkSession, table: str, column: str) -> DataFrame:
 
 
 def test_not_null(spark: SparkSession, table: str, column: str) -> DataFrame:
-    """Rows = records with a NULL in the column."""
+    """Rows = records with a NULL in the column.
+    :func:`_violation_counts` counts these rows in its one query per table;
+    a change to this check's meaning is made there too."""
     return spark.table(table).where(F.col(column).isNull())
 
 
 def test_accepted_values(spark: SparkSession, table: str, column: str,
                          values: list) -> DataFrame:
-    """Rows = distinct values outside the accepted set."""
+    """Rows = distinct values outside the accepted set.
+    :func:`_violation_counts` counts these rows in its one query per table;
+    a change to this check's meaning is made there too."""
     return (
         spark.table(table)
         .where(F.col(column).isNotNull())
@@ -46,7 +55,9 @@ def test_accepted_values(spark: SparkSession, table: str, column: str,
 def test_relationships(spark: SparkSession, table: str, column: str,
                        to_table: str, to_column: str) -> DataFrame:
     """Referential integrity: child values with no parent row (anti-join on
-    the parent key set — broadcastable when the parent is a dimension)."""
+    the parent key set — broadcastable when the parent is a dimension).
+    :func:`_violation_counts` counts these rows in its one query per table;
+    a change to this check's meaning is made there too."""
     child = spark.table(table).where(F.col(column).isNotNull()) \
         .select(F.col(column).alias("__child_key"))
     parent = spark.table(to_table).select(
@@ -88,6 +99,71 @@ def _threshold_met(count: int, cond: str) -> bool:
     raise ValueError(f"Unparseable threshold condition: {cond!r}")
 
 
+# grouped checks per query: each is one GROUPING SETS column, and Spark
+# allows at most 64 grouping columns
+_MAX_CHECKS_PER_QUERY = 32
+
+
+def _violation_counts(spark: SparkSession, table: str,
+                      specs: list[dict]) -> list[int]:
+    """Each spec's dbt violation count, every check on ``table`` answered by
+    one query: a GROUPING SETS aggregation with one grouping per check, so
+    the rows are scanned and shuffled once for all of them. It counts the
+    rows of each check's own violations query (``test_unique`` etc.):
+
+    - not_null: rows with a NULL, summed in the grand-total grouping;
+    - unique: non-NULL values grouped with more than one row;
+    - accepted_values: distinct non-NULL values outside the set (the
+      grouping key is the value when it is outside, else NULL);
+    - relationships: likewise, distinct non-NULL values no parent row
+      has. Whether one has is an existence join on the parent's key
+      (broadcast when the parent is a dimension), the anti-join's
+      condition, so the parent is not shuffled.
+    """
+    cols, keys = [], []
+    for i, spec in enumerate(specs):
+        kind, col, v = spec["check"], F.col(spec["column"]), f"__v{i}"
+        if kind == "not_null":
+            cols.append(col.isNull().alias(v))
+            continue
+        if kind == "accepted_values":
+            col = F.when(~col.isin(spec["values"]), col)
+        elif kind == "relationships":
+            found = spark.table(spec["to_table"]).where(
+                F.col(spec["to_column"]) == col.outer()).exists()
+            col = F.when(~found, col)
+        elif kind != "unique":
+            raise ValueError(f"Unknown check: {kind!r}")
+        keys.append(v)
+        cols.append(col.alias(v))
+    rows = spark.table(table).select(*cols)
+    nulls = [c for c in rows.columns if c not in keys]
+
+    groups = rows.groupingSets([[k] for k in keys] + [[]], *keys).agg(
+        F.count(F.lit(1)).alias("__n"),
+        (F.grouping_id() == (1 << len(keys)) - 1).alias("__total"),
+        *[F.grouping(k).alias(f"__g{k}") for k in keys],
+        *[F.count_if(F.col(c)).alias(f"__nn{c}") for c in nulls])
+    counts = []
+    for i, spec in enumerate(specs):
+        v = f"__v{i}"
+        if spec["check"] == "not_null":
+            counts.append(F.sum(F.when(F.col("__total"),
+                                       F.col(f"__nn{v}"))).alias(v))
+            continue
+        hit = (F.col(f"__g{v}") == 0) & F.col(v).isNotNull()
+        if spec["check"] == "unique":
+            hit &= F.col("__n") > 1
+        counts.append(F.count_if(hit).alias(v))
+    # the totals over the groups are observed on a no-op write rather
+    # than aggregated by a second shuffle to one partition: one Spark job
+    # fewer
+    totals = Observation()
+    groups.observe(totals, *counts).write.format("noop").mode(
+        "overwrite").save()
+    return [int(totals.get[f"__v{i}"] or 0) for i in range(len(specs))]
+
+
 def run_checks(spark: SparkSession, checks: list[dict],
                engine=None, store_failures: bool = False) -> DataFrame:
     """Run a list of check specs and report violation counts + status.
@@ -97,23 +173,35 @@ def run_checks(spark: SparkSession, checks: list[dict],
            ["severity": "error"|"warn", "warn_if": "!=0",
             "error_if": "!=0"]}.
 
+    The checks on one table run as one query (``_violation_counts``;
+    up to ``_MAX_CHECKS_PER_QUERY`` checks each).
     dbt semantics: severity 'error' fails when ``error_if`` is met (else
     warns when ``warn_if`` is met); severity 'warn' can only warn.
     ``store_failures`` persists each failing check's violation rows to an
     audit table ``dbt_test_failures__<check>_<table>_<column>`` in the
     engine's schema (requires ``engine``), mirroring dbt's
-    --store-failures.
+    --store-failures. The report is driver-local: collecting it launches
+    no Spark job.
     """
-    rows = []
-    for spec in checks:
-        kind = spec["check"]
-        df = _check_df(spark, spec)
-        name = f"{kind}:{spec['table']}.{spec['column']}"
-        count = df.count()
+    by_table: dict[str, list[int]] = {}  # table -> indexes into checks
+    for i, spec in enumerate(checks):
         severity = spec.get("severity", "error")
         if severity not in ("error", "warn"):
             raise ValueError(f"Invalid severity: {severity!r}")
-        if severity == "error" and _threshold_met(
+        by_table.setdefault(spec["table"], []).append(i)
+    counts = [0] * len(checks)
+    for table, idx in by_table.items():
+        for lo in range(0, len(idx), _MAX_CHECKS_PER_QUERY):
+            part = idx[lo:lo + _MAX_CHECKS_PER_QUERY]
+            specs = [checks[i] for i in part]
+            for i, n in zip(part, _violation_counts(spark, table, specs)):
+                counts[i] = n
+
+    rows = []
+    for spec, count in zip(checks, counts):
+        kind = spec["check"]
+        name = f"{kind}:{spec['table']}.{spec['column']}"
+        if spec.get("severity", "error") == "error" and _threshold_met(
                 count, spec.get("error_if", "!=0")):
             status = "error"
         elif _threshold_met(count, spec.get("warn_if", "!=0")):
@@ -130,11 +218,12 @@ def run_checks(spark: SparkSession, checks: list[dict],
             existing = engine.catalog.get_relation(rel)
             if existing is not None:
                 engine.catalog.drop_relation(existing)
-            df.write.format("parquet").saveAsTable(rel.render_unquoted())
+            _check_df(spark, spec).write.format("parquet").saveAsTable(
+                rel.render_unquoted())
             failures_table = ident
         rows.append((name, count, status, failures_table))
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "check string, violations bigint, status string,"
         " failures_table string",
     )

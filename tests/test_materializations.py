@@ -2,6 +2,8 @@
 battery (occupant types, full refresh, contracts, schema-change modes,
 grants/comments bookkeeping)."""
 
+import time
+
 import pytest
 
 from dbt_extrica_spark import Model
@@ -490,6 +492,89 @@ def test_partition_scoped_merge_emptied_partition(engine):
          "SELECT k, v, part FROM VALUES (1, 11, 'B') AS t(k, v, part)", cfg)
     rows = {(r.k, r.v, r.part) for r in engine.table("pempty").collect()}
     assert rows == {(1, 11, "B"), (2, 20, "B")}
+
+
+def _partitions(engine, name):
+    return sorted(r[0] for r in engine.spark.sql(
+        f"SHOW PARTITIONS {engine.relation(name).render()}").collect())
+
+
+def test_partition_scoped_merge_moves_row_out_of_partition(engine):
+    # k=1 moves from 'A' to 'C': 'A' keeps k=3 (rewritten without k=1),
+    # 'C' is new, and 'B' is outside the affected set and stays as it was
+    cfg = {"materialized": "incremental", "incremental_strategy": "merge",
+           "unique_key": "k", "partition_by": ["part"]}
+    _inc(engine, "pmove",
+         "SELECT k, v, part FROM VALUES (1, 10, 'A'), (2, 20, 'B'),"
+         " (3, 30, 'A') AS t(k, v, part)", cfg)
+    _inc(engine, "pmove",
+         "SELECT k, v, part FROM VALUES (1, 11, 'C') AS t(k, v, part)", cfg)
+    rows = {(r.k, r.v, r.part) for r in engine.table("pmove").collect()}
+    assert rows == {(1, 11, "C"), (2, 20, "B"), (3, 30, "A")}
+    assert _partitions(engine, "pmove") == ["part=A", "part=B", "part=C"]
+
+
+def test_partition_scoped_delete_insert_empties_partition(engine):
+    # every row of 'A' carries a batch key, and the batch's rows all land
+    # in 'B': 'A' must be dropped, not left holding the deleted rows
+    cfg = {"materialized": "incremental",
+           "incremental_strategy": "delete+insert",
+           "unique_key": "k", "partition_by": ["part"]}
+    _inc(engine, "pdiempty",
+         "SELECT k, v, part FROM VALUES (1, 10, 'A'), (2, 20, 'A'),"
+         " (3, 30, 'B') AS t(k, v, part)", cfg)
+    _inc(engine, "pdiempty",
+         "SELECT k, v, part FROM VALUES (1, 11, 'B'), (2, 21, 'B')"
+         " AS t(k, v, part)", cfg)
+    rows = {(r.k, r.v, r.part) for r in engine.table("pdiempty").collect()}
+    assert rows == {(1, 11, "B"), (2, 21, "B"), (3, 30, "B")}
+    assert _partitions(engine, "pdiempty") == ["part=B"]
+
+
+@pytest.fixture()
+def non_utc_process(monkeypatch):
+    """The Python process in a time zone behind UTC, as on a host outside
+    UTC: collected TIMESTAMPs become naive local datetimes, while the
+    session time zone stays as configured."""
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_partition_scoped_merge_timestamp_partition(engine, non_utc_process):
+    # the affected partition goes to the driver and back: it must still
+    # select the target's rows, or the overwrite keeps only the batch
+    cfg = {"materialized": "incremental", "incremental_strategy": "merge",
+           "unique_key": "k", "partition_by": ["ts"]}
+    a, b = "TIMESTAMP'2024-03-01 00:00:00'", "TIMESTAMP'2024-03-02 06:30:00'"
+    _inc(engine, "pts",
+         f"SELECT * FROM VALUES (1, 10, {a}), (2, 20, {a}), (3, 30, {b})"
+         " AS t(k, v, ts)", cfg)
+    _inc(engine, "pts",
+         f"SELECT * FROM VALUES (1, 11, {a}) AS t(k, v, ts)", cfg)
+    rows = {(r.k, r.v) for r in engine.sql(
+        f"SELECT k, v FROM {engine.relation('pts').render()}"
+        f" WHERE ts = {a}").collect()}
+    assert rows == {(1, 11), (2, 20)}
+    assert engine.table("pts").count() == 3
+
+
+def test_partition_scoped_delete_insert_empties_timestamp_partition(
+        engine, non_utc_process):
+    cfg = {"materialized": "incremental",
+           "incremental_strategy": "delete+insert",
+           "unique_key": "k", "partition_by": ["ts"]}
+    a, b = "TIMESTAMP'2024-03-01 00:00:00'", "TIMESTAMP'2024-03-02 06:30:00'"
+    _inc(engine, "ptsdi",
+         f"SELECT * FROM VALUES (1, 10, {a}), (2, 20, {b}) AS t(k, v, ts)",
+         cfg)
+    _inc(engine, "ptsdi",
+         f"SELECT * FROM VALUES (1, 11, {b}) AS t(k, v, ts)", cfg)
+    assert {(r.k, r.v) for r in engine.table("ptsdi").collect()} == {
+        (1, 11), (2, 20)}
+    assert len(_partitions(engine, "ptsdi")) == 1
 
 
 def test_bucketed_join_avoids_exchange(engine):

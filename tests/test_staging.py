@@ -201,7 +201,7 @@ def _merge_fails(spark, engine, docs, m):
 
 
 def _partition_overwrite_fails(spark, engine, docs, m):
-    # the affected partitions are cached when the commit fails
+    # the partition-scoped commit fails after the merge batch is staged
     parted = dict(_MERGE, partition_by=["p"])
     _merge_model(engine, "stg_fail_parted", "(1, 'a', 0), (2, 'b', 1)",
                  parted)
