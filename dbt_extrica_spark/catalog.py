@@ -363,14 +363,16 @@ class CatalogClient:
                 )
 
     def rewrite_table(self, relation: Relation, select_sql: str,
-                      decls: list[str] | None = None) -> None:
+                      decls: list[str] | None = None,
+                      old: dict | None | object = _UNDESCRIBED) -> None:
         """Replace ``relation`` with ``select_sql``'s rows through
         :meth:`swap_in`, keeping its provider, partitioning, buckets,
         comment and table properties. ``decls`` declares the new column
         list explicitly -- required when it carries char/varchar lengths,
         which a CTAS of a CAST would silently erase (Spark
-        CharVarcharUtils)."""
-        old = self.describe_table(relation)
+        CharVarcharUtils). ``old``: as for :meth:`swap_in`."""
+        if old is _UNDESCRIBED:
+            old = self.describe_table(relation)
         d = old or {}
         clauses = table_clauses(
             d.get("provider") or "parquet", d.get("comment"),

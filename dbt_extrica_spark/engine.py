@@ -24,11 +24,10 @@ import os
 import shutil
 import tempfile
 import uuid
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import CatalogClient
+from .catalog import _UNDESCRIBED, CatalogClient
 from .connections import AdapterResponse, ExecutionManager, ResultCursor
 from .errors import CompilationError, EngineError, map_exception
 from .operators import materializations as mats
@@ -265,20 +264,18 @@ class Engine:
     # ------------------------------------------------------------------
     # commit protocol
     # ------------------------------------------------------------------
-    def swap_in(self, target: Relation,
-                create_stage: Callable[[Relation], object]) -> None:
-        """Commit a rebuild of ``target``: ``create_stage(stage)`` builds the
-        new table under a staging name, which then replaces the target by
-        rename (:meth:`CatalogClient.swap_in`)."""
-        self.catalog.swap_in(target, create_stage)
-
-    def overwrite_table_atomic(self, relation: Relation, df: DataFrame) -> None:
-        """Replace ``relation``'s rows with ``df`` through :meth:`swap_in`,
-        keeping its layout (:meth:`CatalogClient.rewrite_table`)."""
+    def overwrite_table_atomic(self, relation: Relation, df: DataFrame,
+                               old: dict | None | object = _UNDESCRIBED
+                               ) -> None:
+        """Replace ``relation``'s rows with ``df`` by the stage-and-swap
+        commit (:meth:`CatalogClient.swap_in`), keeping its layout
+        (:meth:`CatalogClient.rewrite_table`; ``old``: the relation's
+        description when the caller already has it)."""
         view = f"__swap_src_{uuid.uuid4().hex[:8]}"
         df.createOrReplaceTempView(view)
         try:
-            self.catalog.rewrite_table(relation, f"SELECT * FROM {view}")
+            self.catalog.rewrite_table(relation, f"SELECT * FROM {view}",
+                                       old=old)
         finally:
             self.spark.catalog.dropTempView(view)
 

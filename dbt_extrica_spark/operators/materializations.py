@@ -6,13 +6,20 @@ DDL/DML (reference: macros/materializations/*.sql, macros/adapters.sql). Here
 each is a Python function against a shared :class:`~..engine.Engine`.
 
 Commit protocol: every rebuild of an existing table goes through
-:meth:`~..engine.Engine.swap_in` -- the reference's table 'rename' mode
-(reference: table.sql:12-48). The new table is built under a staging name,
-renamed into place, and the old one is dropped, so readers never see a
-missing or empty target and a failed build leaves the previous version.
+:meth:`~..catalog.CatalogClient.swap_in` -- the reference's table 'rename'
+mode (reference: table.sql:12-48). The new table is built under a staging
+name, renamed into place, and the old one is dropped, so readers never see
+a missing or empty target and a failed build leaves the previous version.
 ``swap_in`` repairs partitions after each rename: Spark's rename moves the
 table directory but not the partition locations, and the backup's drop
 would otherwise delete the new table's files.
+
+Row rewrites of an existing table (merge, delete+insert,
+insert_overwrite, microbatch periods, snapshots) commit through
+:func:`~.merge.rewrite_rows`, which routes by the table's own layout: a
+partitioned table rewrites only the partitions the change touches, an
+unpartitioned one is swapped whole. The model's ``partition_by`` is read
+only where a table is created.
 """
 
 from __future__ import annotations
@@ -151,8 +158,8 @@ def create_view_as(engine: "Engine", relation: Relation, sql: str,
 
 def materialize_table(engine: "Engine", model: "Model") -> Relation:
     """A9 — two modes (reference: table.sql:1-70): 'rename' (default)
-    rebuilds an existing relation through :meth:`Engine.swap_in`; 'drop'
-    drops then CTAS."""
+    rebuilds an existing relation through :meth:`CatalogClient.swap_in`;
+    'drop' drops then CTAS."""
     config = model.config
     mode = config.get("on_table_exists", "rename")
     if mode not in ("rename", "drop"):
@@ -176,7 +183,7 @@ def materialize_table(engine: "Engine", model: "Model") -> Relation:
             engine.catalog.drop_relation(existing)
         create(target)
     else:
-        engine.swap_in(target, create)  # rename mode (table.sql:12-48)
+        engine.catalog.swap_in(target, create)  # rename mode (table.sql:12-48)
     engine.apply_model_hooks_and_grants(model, target)
     return target
 
@@ -355,11 +362,8 @@ def materialize_incremental(engine: "Engine", model: "Model",
                 src_df = st.cache(ck)
                 src_df.count()
         tgt_df = engine.spark.table(target.render_unquoted())
+        batch = src_df.select(*dest_columns)
 
-        scoped = bool(partition_by) and all(
-            pc.lower() in {c.lower() for c in dest_columns}
-            for pc in partition_by
-        )
         if strategy in ("default", "append") or (
             strategy == "merge" and not unique_key
         ):
@@ -368,70 +372,46 @@ def materialize_incremental(engine: "Engine", model: "Model",
         elif strategy == "insert_overwrite":
             # dbt-spark's classic strategy (not in the Trino reference,
             # which has no partition-overwrite primitive): replace exactly
-            # the partitions the batch writes rows into; without
-            # partition_by, replace the whole table (dbt-spark semantics).
-            if scoped:
-                merge_ops.dynamic_overwrite_insert(
-                    engine.spark, target.render_unquoted(),
-                    src_df.select(*dest_columns))
-            else:
-                engine.overwrite_table_atomic(
-                    target, src_df.select(*dest_columns))
+            # the partitions the batch writes rows into; an unpartitioned
+            # table is replaced whole (dbt-spark semantics).
+            merge_ops.rewrite_rows(engine, target, lambda rows: batch,
+                                   [batch])
         elif strategy == "merge":
             update_columns = merge_ops.get_merge_update_columns(
                 config.get("merge_update_columns"),
                 config.get("merge_exclude_columns"),
                 dest_columns,
             )
-            if scoped:
-                # partition-scoped path: scope = source partitions ∪
-                # partitions holding key-matched target rows (a key-only
-                # superset of the matched set is safe — extra partitions
-                # just rewrite unchanged)
-                keys = ([unique_key] if isinstance(unique_key, str)
-                        else list(unique_key))
-                matched_parts = tgt_df.join(
-                    src_df.select(*keys).distinct(), on=keys, how="left_semi"
-                )
-                merge_ops.partition_scoped_overwrite(
-                    engine, target, src_df.select(*dest_columns),
-                    lambda scope: merge_ops.merge_upsert(
-                        scope, src_df, unique_key, dest_columns,
-                        update_columns, predicates),
-                    partition_by, extra_affected=matched_parts,
-                )
-            else:
-                result = merge_ops.merge_upsert(
-                    tgt_df, src_df, unique_key, dest_columns,
-                    update_columns, predicates,
-                )
-                engine.overwrite_table_atomic(target, result)
+            keys = merge_ops._key_list(unique_key)
+            # the batch's partitions ∪ those holding key-matched target
+            # rows (a key-only superset of the matched set is safe — extra
+            # partitions just rewrite unchanged)
+            matched = tgt_df.join(src_df.select(*keys).distinct(), on=keys,
+                                  how="left_semi")
+            merge_ops.rewrite_rows(
+                engine, target,
+                lambda rows: merge_ops.merge_upsert(
+                    rows, src_df, unique_key, dest_columns, update_columns,
+                    predicates),
+                [batch, matched])
         else:  # delete+insert
-            if scoped and unique_key:
-                keys = ([unique_key] if isinstance(unique_key, str)
-                        else list(unique_key))
-                # rows the column-wise delete will remove determine extra
-                # affected partitions (their partition values may lie outside
-                # the source batch's)
+            touched = [batch]
+            if unique_key:
+                # the rows the column-wise delete removes: their
+                # partitions may lie outside the batch's
                 doomed = tgt_df
-                for k in keys:
+                for k in merge_ops._key_list(unique_key):
                     doomed = doomed.join(
                         src_df.select(k).where(src_df[k].isNotNull())
-                        .distinct(),
-                        on=k, how="left_semi")
+                        .distinct(), on=k, how="left_semi")
                 for p in predicates or []:
                     doomed = doomed.where(p)
-                merge_ops.partition_scoped_overwrite(
-                    engine, target, src_df.select(*dest_columns),
-                    lambda scope: merge_ops.delete_insert(
-                        scope, src_df, unique_key, dest_columns, predicates),
-                    partition_by, extra_affected=doomed,
-                )
-            else:
-                result = merge_ops.delete_insert(
-                    tgt_df, src_df, unique_key, dest_columns, predicates,
-                )
-                engine.overwrite_table_atomic(target, result)
+                touched.append(doomed)
+            merge_ops.rewrite_rows(
+                engine, target,
+                lambda rows: merge_ops.delete_insert(
+                    rows, src_df, unique_key, dest_columns, predicates),
+                touched)
     finally:
         st.close()
         tmp_existing = engine.catalog.get_relation(tmp)
@@ -499,8 +479,8 @@ def _run_microbatch(engine: "Engine", model: "Model", target: Relation,
     - incremental runs: periods from ``lookback`` batches before the
       target's max event time (late-data reprocessing window) through the
       source's end; each period is rewritten.
-    - with ``partition_by`` covering the period column the rewrite is
-      partition-scoped (dynamic partition overwrite) — the 100 TB path: a
+    - on a target partitioned by the period column the rewrite is
+      partition-scoped (:func:`~.merge.rewrite_rows`) — the 100 TB path: a
       day's batch rewrites one partition, not the table.
 
     Batches are independent — batch-at-a-time also bounds executor memory
@@ -610,19 +590,12 @@ def _run_microbatch(engine: "Engine", model: "Model", target: Relation,
     if not dest_columns:
         dest_columns = [c.name for c in
                         engine.catalog.get_columns_in_relation(target)]
-    partition_by = config.get("partition_by")
-    scoped = bool(partition_by) and all(
-        pc.lower() in {c.lower() for c in dest_columns}
-        for pc in partition_by
-    )
     # each batch is processed independently with per-batch retry (dbt 1.9
     # runs batches as separate statements with retries: transient executor
     # loss mid-batch must not fail the whole backfill). A batch is
-    # idempotent — replace-of-period — so a retry after a partial failure
-    # converges; the stage-and-swap commit means a failed attempt never
-    # corrupts the target.
+    # idempotent — replace-of-period — and every attempt re-reads the
+    # target, so a retry after a partial failure converges.
     retries = int(config.get("batch_retries", 0))
-    tgt_df = spark.table(target.render_unquoted())
     for s, e in batches:
         period = F.expr(period_sql(s, e))
         batch_rows = src_df.where(period).select(*dest_columns)
@@ -634,30 +607,17 @@ def _run_microbatch(engine: "Engine", model: "Model", target: Relation,
         attempt = 0
         while True:
             try:
-                if scoped:
-                    merge_ops.partition_scoped_overwrite(
-                        engine, target, batch_rows,
-                        lambda scope, _p=period, _b=batch_rows: (
-                            scope.where(~_p).unionByName(_b)
-                        ),
-                        partition_by,
-                        extra_affected=tgt_df.where(period),
-                    )
-                else:
-                    engine.overwrite_table_atomic(
-                        target,
-                        tgt_df.where(~period).unionByName(batch_rows),
-                    )
+                merge_ops.rewrite_rows(
+                    engine, target,
+                    lambda rows, _p=period, _b=batch_rows: (
+                        rows.where(~_p).unionByName(_b)),
+                    [batch_rows,
+                     spark.table(target.render_unquoted()).where(period)])
                 break
             except Exception:
                 attempt += 1
                 if attempt > retries:
                     raise
-                # re-read: a partial attempt may have left a valid previous
-                # version behind the atomic swap
-                tgt_df = spark.table(target.render_unquoted())
-        if not scoped:
-            tgt_df = spark.table(target.render_unquoted())
 
 
 def process_schema_changes(engine: "Engine", mode: str, source: Relation,
@@ -716,7 +676,7 @@ def materialize_materialized_view(engine: "Engine", model: "Model",
     """A11 — Spark has no MVs; emulate as managed table + stored defining SQL
     (reference: materialized_view.sql:1-35). Any config change forces full
     refresh (materialized_view.sql:24-30); replace uses the same
-    :meth:`Engine.swap_in` as tables (materialized_view.sql:11-21)."""
+    :meth:`CatalogClient.swap_in` as tables (materialized_view.sql:11-21)."""
     target = engine.relation(model.name, RelationType.MaterializedView)
     key = (target.schema, target.identifier)
     sql = engine.compile_sql(model)
@@ -729,7 +689,7 @@ def materialize_materialized_view(engine: "Engine", model: "Model",
         create_table_as(engine, relation, sql, **_config_layout(model.config))
 
     if existing is not None:
-        engine.swap_in(target, create)
+        engine.catalog.swap_in(target, create)
     else:
         create(target)
     engine.catalog.mv_definitions[key] = sql

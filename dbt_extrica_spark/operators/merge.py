@@ -2,8 +2,12 @@
 
 The reference emits MERGE / DELETE+INSERT SQL for Trino (reference:
 materializations/incremental.sql:112-205). Vanilla Spark-on-parquet has no
-MERGE/DELETE, so these are deterministic DataFrame rewrites followed by the
-stage-and-swap commit (SURVEY §4.2 item 1).
+MERGE/DELETE, so these are deterministic DataFrame rewrites of the target's
+rows (SURVEY §4.2 item 1), committed by :func:`rewrite_rows`: the one
+routing rule, read from the table's own layout -- a partitioned target
+rewrites only the partitions the change touches
+(:func:`partition_scoped_overwrite`), an unpartitioned one is replaced by
+the stage-and-swap commit.
 
 Scale posture:
 - ``merge``: two hash joins on the unique key (anti + inner) plus one anti
@@ -220,6 +224,8 @@ def delete_insert(
 # "static" turns the other's partition-scoped write into a full overwrite.
 _DYNAMIC_OVERWRITE_LOCK = threading.Lock()
 
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
 
 def dynamic_overwrite_insert(spark, table_name: str,
                              df: DataFrame) -> None:
@@ -238,20 +244,45 @@ def dynamic_overwrite_insert(spark, table_name: str,
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
+def rewrite_rows(engine, target, rewrite, touched: list[DataFrame]) -> None:
+    """Commit a rewrite of some of ``target``'s rows -- the one place that
+    chooses between the partition-scoped write and the full swap, by the
+    table's own layout (one ``describe_table``), never by model config.
+
+    ``rewrite(rows)`` maps a set of the target's rows to their final
+    content; ``touched`` are the frames whose rows' partitions may change
+    (the batch, the target rows it deletes or updates, ...). A partitioned
+    target rewrites only those partitions
+    (:func:`partition_scoped_overwrite`); an unpartitioned one is rebuilt
+    from ``rewrite`` over the whole table by the stage-and-swap commit,
+    which reuses the description instead of describing the target again.
+    """
+    described = engine.catalog.describe_table(target)
+    partition_cols = (described or {}).get("partition_columns")
+    if partition_cols:
+        partition_scoped_overwrite(engine, target, rewrite, partition_cols,
+                                   touched)
+    else:
+        engine.overwrite_table_atomic(
+            target, rewrite(engine.spark.table(target.render_unquoted())),
+            old=described)
+
+
 def partition_scoped_overwrite(
     engine,
     target,  # Relation
-    src_df: DataFrame,
     rewrite,  # (tgt_scope: DataFrame) -> DataFrame — final rows for the scope
     partition_cols: list[str],
-    extra_affected: DataFrame | None = None,
+    touched: list[DataFrame],
 ) -> None:
     """Apply an upsert by rewriting ONLY affected partitions (the 100 TB
     incremental path: a 1 GB batch must not rewrite the whole table).
 
-    - affected = source batch's partition values ∪ ``extra_affected`` (e.g.
-      partitions that lose rows to deletes outside the source's partitions)
-    - the rewrite runs over the target restricted to affected partitions
+    - affected = the partition values of every ``touched`` frame (the
+      batch, and e.g. target rows that lose a key to the batch outside its
+      partitions)
+    - the rewrite runs over the target restricted to affected partitions,
+      matched null-safely: the NULL partition is a partition like any other
     - commit via dynamic partition overwrite (only partitions present in the
       result are replaced)
     - partitions whose final content is EMPTY are dropped explicitly —
@@ -267,10 +298,9 @@ def partition_scoped_overwrite(
     tgt_df = spark.table(target.render_unquoted())
     as_target = [F.col(c).cast(tgt_df.schema[c].dataType).alias(c)
                  for c in partition_cols]
-    affected = src_df.select(*partition_cols)
-    if extra_affected is not None:
-        affected = affected.unionByName(
-            extra_affected.select(*partition_cols))
+    affected = touched[0].select(*partition_cols)
+    for frame in touched[1:]:
+        affected = affected.unionByName(frame.select(*partition_cols))
     # Spark's own text for a partition tuple: the key the write's
     # observation reports, and what a DROP PARTITION names; compared as
     # text, never as values converted to and from Python
@@ -281,10 +311,15 @@ def partition_scoped_overwrite(
         "*", spec.alias("__spec")).collect()
     scope = local_frame(spark, [p[:-1] for p in parts], StructType(
         [tgt_df.schema[c] for c in partition_cols]))
-    # a USING-style join reorders the key columns to the front; restore
-    # the table's column order — the dynamic-overwrite insertInto below
-    # is POSITIONAL
-    tgt_scope = tgt_df.join(F.broadcast(scope), on=partition_cols,
+    # the NULL partition needs a null-safe match; a plain equi-join costs
+    # two Spark jobs fewer per commit (measured on a 7-partition merge),
+    # so it serves every scope without a NULL partition
+    in_scope = partition_cols
+    if any(v is None for part in parts for v in part[:-1]):
+        in_scope = [tgt_df[c].eqNullSafe(scope[c]) for c in partition_cols]
+    # the dynamic-overwrite insertInto below is POSITIONAL: keep the
+    # table's column order
+    tgt_scope = tgt_df.join(F.broadcast(scope), on=in_scope,
                             how="left_semi").select(*tgt_df.columns)
     final_scope = rewrite(tgt_scope).select(*tgt_df.columns)
     # the write reports the partitions it wrote rows to, so the rewrite
@@ -298,8 +333,11 @@ def partition_scoped_overwrite(
         values = tuple(part["__spec"])
         if values in kept:
             continue
+        # a NULL partition value is stored (and named) as Hive's default
+        # partition
         clause = ", ".join(
-            "`%s` = '%s'" % (k, str(v).replace("'", "''"))
+            "`%s` = '%s'" % (k, _HIVE_NULL if v is None
+                             else v.replace("'", "''"))
             for k, v in zip(partition_cols, values)
         )
         spark.sql(f"ALTER TABLE {target.render()} "

@@ -48,6 +48,53 @@ _BUCKET_SHIFT = {
 }
 
 
+def _refresh_level(engine: "Engine", target: Relation, source: str,
+                   ts_col: str, bucket: str, dims: list[str],
+                   aggs: dict[str, str], lateness_buckets: int,
+                   raw: bool) -> None:
+    """Build or refresh one rollup level: the first call builds the
+    bucket-partitioned table; later calls recompute only buckets >=
+    (max existing bucket - ``lateness_buckets`` whole buckets), replacing
+    those partitions -- late-arriving rows within the lateness window
+    fold in because affected buckets are recomputed from ``source``, not
+    patched."""
+    select = _rollup_select(source, ts_col, bucket, dims, aggs)
+    if engine.catalog.get_relation(target) is None:
+        engine.spark.sql(
+            f"CREATE TABLE {target.render()} USING PARQUET"
+            f" PARTITIONED BY (bucket) AS {select}"
+        )
+        return
+    wm_row = engine.spark.sql(
+        f"SELECT MAX(bucket) AS wm FROM {target.render()}"
+    ).collect()[0]
+    if wm_row.wm is None:
+        refreshed = engine.spark.sql(select)
+    else:
+        bound = _BUCKET_SHIFT[bucket](F.lit(wm_row.wm), lateness_buckets)
+        bound_str = engine.spark.range(1).select(
+            bound.cast("string")).collect()[0][0]
+        # the floor is typed to the source's time column: TIMESTAMP on a
+        # raw source (the predicate pushes to the source scan, where a
+        # filter on the computed bucket would only prune post-scan;
+        # equivalent because date_trunc floors), DATE on a finer rollup
+        # (prunes its bucket PARTITIONS — the point of the cascade)
+        floor = (f"`{ts_col}` >= TIMESTAMP '{bound_str} 00:00:00'" if raw
+                 else f"`{ts_col}` >= DATE '{bound_str}'")
+        refreshed = engine.spark.sql(_rollup_select(
+            source, ts_col, bucket, dims, aggs, where=floor))
+    tbl_cols = engine.spark.table(target.render_unquoted()).columns
+    dynamic_overwrite_insert(engine.spark, target.render_unquoted(),
+                             refreshed.select(*tbl_cols))
+
+
+def _check_buckets(buckets) -> None:
+    for b in buckets:
+        if b not in _BUCKET_SHIFT:
+            raise ValueError(f"unsupported rollup bucket: {b!r}; one of "
+                             f"{tuple(_BUCKET_SHIFT)}")
+
+
 def rollup_cascade(
     engine: "Engine",
     base_name: str,
@@ -84,9 +131,7 @@ def rollup_cascade(
     fine -> coarse. Returns {level_name: Relation}."""
     dims = dims or []
     aggs = aggs or {"n": ("count", "*")}
-    for b in buckets:
-        if b not in _BUCKET_SHIFT:
-            raise ValueError(f"unsupported cascade bucket: {b!r}")
+    _check_buckets(buckets)
 
     def level_exprs(first: bool) -> dict[str, str]:
         out = {}
@@ -110,35 +155,8 @@ def rollup_cascade(
     for b in buckets:
         name = f"{base_name}_{b}"
         target = engine.relation(name, RelationType.Table)
-        existing = engine.catalog.get_relation(target)
-        exprs = level_exprs(first)
-        select = _rollup_select(src, src_ts, b, dims, exprs)
-        if existing is None:
-            engine.spark.sql(
-                f"CREATE TABLE {target.render()} USING PARQUET"
-                f" PARTITIONED BY (bucket) AS {select}"
-            )
-        else:
-            wm_row = engine.spark.sql(
-                f"SELECT MAX(bucket) AS wm FROM {target.render()}"
-            ).collect()[0]
-            if wm_row.wm is None:
-                refreshed = engine.spark.sql(select)
-            else:
-                bound = _BUCKET_SHIFT[b](F.lit(wm_row.wm), lateness_buckets)
-                bound_str = engine.spark.range(1).select(
-                    bound.cast("string")).collect()[0][0]
-                # the floor is typed to the source's time column: TIMESTAMP
-                # for the raw level (predicate pushes to the raw scan),
-                # DATE for cascade levels (prunes the finer rollup's bucket
-                # PARTITIONS — the whole point of the cascade)
-                floor = (f"`{src_ts}` >= TIMESTAMP '{bound_str} 00:00:00'"
-                         if first else f"`{src_ts}` >= DATE '{bound_str}'")
-                refreshed = engine.spark.sql(_rollup_select(
-                    src, src_ts, b, dims, exprs, where=floor))
-            tbl_cols = engine.spark.table(target.render_unquoted()).columns
-            dynamic_overwrite_insert(engine.spark, target.render_unquoted(),
-                                     refreshed.select(*tbl_cols))
+        _refresh_level(engine, target, src, src_ts, b, dims,
+                       level_exprs(first), lateness_buckets, raw=first)
         rels[name] = target
         src, src_ts, first = target.render(), "bucket", False
     return rels
@@ -154,44 +172,18 @@ def continuous_rollup(
     aggs: dict[str, str] | None = None,
     lateness_buckets: int = 1,
 ) -> Relation:
-    """Create or incrementally refresh the rollup.
+    """Create or incrementally refresh the rollup: the single-level case
+    of :func:`rollup_cascade`, with free-form aggregate expressions (one
+    level recomputes from the source, so nothing has to re-aggregate).
 
     - first call: full build, PARTITIONED BY bucket
     - later calls: recompute only buckets >= (max existing bucket -
-      lateness_buckets), replacing those partitions — late-arriving rows
-      within the lateness window are folded in correctly because affected
-      buckets are recomputed from the source, not patched.
+      ``lateness_buckets`` whole buckets of ``bucket``), replacing those
+      partitions.
     """
-    dims = dims or []
-    aggs = aggs or {"n": "CAST(COUNT(*) AS BIGINT)"}
+    _check_buckets((bucket,))
     target = engine.relation(name, RelationType.Table)
-    existing = engine.catalog.get_relation(target)
-    select = _rollup_select(source, ts_col, bucket, dims, aggs)
-
-    if existing is None:
-        engine.spark.sql(
-            f"CREATE TABLE {target.render()} USING PARQUET"
-            f" PARTITIONED BY (bucket) AS {select}"
-        )
-        return target
-
-    wm_row = engine.spark.sql(
-        f"SELECT MAX(bucket) AS wm FROM {target.render()}"
-    ).collect()[0]
-    if wm_row.wm is None:
-        refreshed = engine.spark.sql(select)
-    else:
-        # refresh floor expressed on the RAW timestamp, so the predicate
-        # pushes to the source scan (a filter on the computed bucket would
-        # only prune post-scan); equivalent because date_trunc floors
-        bound = F.date_sub(F.lit(wm_row.wm), lateness_buckets)
-        bound_str = engine.spark.range(1).select(
-            bound.cast("string")).collect()[0][0]
-        refreshed = engine.spark.sql(_rollup_select(
-            source, ts_col, bucket, dims, aggs,
-            where=f"`{ts_col}` >= TIMESTAMP '{bound_str} 00:00:00'",
-        ))
-    tbl_cols = engine.spark.table(target.render_unquoted()).columns
-    dynamic_overwrite_insert(engine.spark, target.render_unquoted(),
-                             refreshed.select(*tbl_cols))
+    _refresh_level(engine, target, source, ts_col, bucket, dims or [],
+                   aggs or {"n": "CAST(COUNT(*) AS BIGINT)"},
+                   lateness_buckets, raw=True)
     return target

@@ -3,7 +3,7 @@
 The reference supplies the Trino-specific pieces (scd_id hash:
 snapshot.sql:1-6; merge-on-scd_id: snapshot.sql:13-34; staging cleanup:
 snapshot.sql:8-11) while dbt-core computes the change set. Here the whole
-pipeline is DataFrame joins + one atomic overwrite:
+pipeline is DataFrame joins + one row-rewrite commit:
 
 - insertions: source rows that are new OR changed -> new open versions
 - updates:    open snapshot rows whose source row changed -> closed out
@@ -71,9 +71,10 @@ def snapshot(
      'now' used by the check strategy and hard-delete close-outs (keeps tests
     deterministic; dbt uses snapshot_get_time()).
 
-    ``partition_by`` (scale path): the snapshot table is PARTITIONED BY the
-    given data columns and each pass rewrites only partitions holding
-    closed-out rows plus partitions receiving new versions — a history table
+    ``partition_by`` (scale path): the snapshot table is created
+    PARTITIONED BY the given data columns, and each pass over a partitioned
+    table rewrites only partitions holding closed-out rows plus partitions
+    receiving new versions (:func:`~.merge.rewrite_rows`) — a history table
     grows forever, so unbounded full rewrites are the first thing to break
     at 100 TB."""
     keys = _key_list(unique_key)
@@ -178,23 +179,10 @@ def snapshot(
             .unionByName(insert_changed.select(*snap.columns))
         )
 
-    scoped = bool(partition_by) and all(c in snap.columns for c in partition_by)
-    if scoped:
-        # affected = partitions receiving new versions ∪ partitions whose
-        # open rows close out (a changed key's old partition may differ
-        # from its new one)
-        new_version_parts = (
-            insert_new.select(*partition_by)
-            .unionByName(insert_changed.select(*partition_by))
-        )
-        closing_parts = closed.select(*partition_by)
-        if deleted is not None:
-            closing_parts = closing_parts.unionByName(
-                deleted.select(*partition_by))
-        merge_ops.partition_scoped_overwrite(
-            engine, target, new_version_parts, assemble, partition_by,
-            extra_affected=closing_parts,
-        )
-    else:
-        engine.overwrite_table_atomic(target, assemble(snap))
+    # partitions receiving new versions, and those whose open rows close
+    # out (a changed key's old partition may differ from its new one)
+    touched = [insert_new, insert_changed, closed]
+    if deleted is not None:
+        touched.append(deleted)
+    merge_ops.rewrite_rows(engine, target, assemble, touched)
     return target

@@ -246,47 +246,21 @@ def _require_table_or_fresh(engine, table_name: str) -> None:
             f"to rebuild from scratch")
 
 
-def _merge_upsert_callback(engine, table_name: str, unique_key,
-                           dest_columns: list[str] | None,
-                           null_safe_keys: bool = False):
-    """The foreachBatch upsert closure shared by the streaming
-    materialization shapes: first non-empty batch creates the table,
-    later batches run the SAME merge rewrite the batch incremental
-    strategy uses (operators/merge.py) and commit by atomic swap.
-    ``null_safe_keys``: key-converging loops over AGGREGATE rows set
-    this — a NULL group key is legitimate data there and must converge
-    instead of re-inserting every batch (merge_upsert docs)."""
+def _merge_into(unique_key, dest_columns: list[str] | None,
+                null_safe_keys: bool = False) -> dict:
+    """``build``/``merge`` for :func:`_start_upsert_sink` that upsert each
+    micro-batch through the SAME merge rewrite the batch incremental
+    strategy uses (operators/merge.py). ``null_safe_keys``: key-converging
+    loops over AGGREGATE rows set this — a NULL group key is legitimate
+    data there and must converge instead of re-inserting every batch
+    (merge_upsert docs)."""
     from ..operators import merge as merge_ops
-    from ..relation import RelationType
 
-    target = engine.relation(table_name, RelationType.Table)
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        existing = engine.catalog.get_relation(target)
-        cols = dest_columns or batch_df.columns
-        if existing is None:
-            _require_table_or_fresh(engine, table_name)
-            # create the table even from an EMPTY first batch: Spark
-            # commits the batch to the checkpoint log either way, so
-            # skipping creation would make the next non-empty batch
-            # read "commits present + table missing" — the exact
-            # signature of after-the-fact table loss — and refuse a
-            # perfectly fresh build (e.g. batch 0 fully filtered out
-            # upstream). The schema is known on an empty batch.
-            batch_df.select(*cols).write.format("parquet").saveAsTable(
-                target.render_unquoted())
-            return
-        if not batch_df.take(1):
-            # empty batch into an EXISTING table: the merge is a no-op;
-            # skip the full atomic-swap rewrite it would otherwise cost
-            return
-        tgt_df = engine.spark.table(target.render_unquoted())
-        result = merge_ops.merge_upsert(
-            tgt_df, batch_df, unique_key, cols, None, None,
-            null_safe_keys=null_safe_keys)
-        engine.overwrite_table_atomic(target, result)
-
-    return upsert
+    return dict(
+        build=lambda df: df.select(*(dest_columns or df.columns)),
+        merge=lambda tbl, batch: merge_ops.merge_upsert(
+            tbl, batch, unique_key, batch.columns,
+            null_safe_keys=null_safe_keys))
 
 
 def streaming_incremental_merge(
@@ -304,16 +278,8 @@ def streaming_incremental_merge(
     Returns the StreamingQuery; combine with ``trigger(availableNow=True)``
     upstream of .start() via run semantics below (we always use availableNow
     so tests/catch-up runs terminate)."""
-    query = (
-        stream.writeStream.foreachBatch(
-            _merge_upsert_callback(engine, table_name, unique_key,
-                                   dest_columns))
-        .trigger(availableNow=True)
-        .option("checkpointLocation",
-                f"{engine.warehouse_dir}/_checkpoints/{table_name}")
-        .start()
-    )
-    return query
+    return _start_upsert_sink(engine, stream, table_name,
+                              **_merge_into(unique_key, dest_columns))
 
 
 def _cdc_apply_callback(engine, table_name: str, unique_key,
@@ -562,18 +528,10 @@ def streaming_rollup_maintenance(
 
     Returns the StreamingQuery (availableNow — callers await it)."""
     agg = windowed_counts(stream, window=window, watermark=watermark)
-    query = (
-        agg.writeStream.foreachBatch(
-            _merge_upsert_callback(engine, table_name,
-                                   ["window_start", "event_type"], None,
-                                   null_safe_keys=True))
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation",
-                f"{engine.warehouse_dir}/_checkpoints/{table_name}")
-        .start()
-    )
-    return query
+    return _start_upsert_sink(
+        engine, agg, table_name, output_mode="update",
+        **_merge_into(["window_start", "event_type"], None,
+                      null_safe_keys=True))
 
 
 def streaming_theta_maintenance(
@@ -604,26 +562,27 @@ def streaming_theta_maintenance(
     Returns the StreamingQuery (availableNow — callers await it)."""
     from ..extensions.sketch import theta_build, theta_union
 
-    return _start_sketch_maintenance(
+    return _start_upsert_sink(
         engine, stream, table_name,
         build=lambda df: theta_build(df, item_col, group_cols, k=k),
         merge=lambda tbl, sk: theta_union(tbl.unionByName(sk),
                                           group_cols, k))
 
 
-def _start_sketch_maintenance(engine, stream: DataFrame, table_name: str,
-                              build, merge) -> "object":
-    """Shared mergeable-sketch maintenance loop: per micro-batch,
-    ``build(batch_df)`` produces the batch's sketch table and
-    ``merge(durable_table_df, batch_sketch_df)`` folds it into the
-    durable table (atomic-swap committed). The create/refuse/empty
-    protocol is the one place it must live (a prior review caught it
-    triplicated): the table is created even from an EMPTY first batch
-    (the batch commits to the checkpoint log regardless, and a skipped
-    creation would trip the table-loss refusal on the next non-empty
-    batch); a missing table with prior commits REFUSES re-baseline;
-    empty later batches skip the rewrite (every sketch merge here is a
-    no-op on empty input)."""
+def _start_upsert_sink(engine, stream: DataFrame, table_name: str,
+                       build, merge, output_mode: str | None = None
+                       ) -> "object":
+    """The one streaming upsert sink (availableNow trigger, checkpointed
+    under the warehouse): per micro-batch, ``build(batch_df)`` produces
+    the batch's rows and ``merge(durable_table_df, built_df)`` folds them
+    into the durable table (atomic-swap committed). The create/refuse/empty
+    protocol is the one place it must live: the table is created even
+    from an EMPTY first batch (the batch commits to the checkpoint log
+    regardless, and a skipped creation would trip the table-loss refusal
+    on the next non-empty batch); a missing table with prior commits
+    REFUSES re-baseline; empty later batches skip the rewrite (every merge
+    here is a no-op on empty input). ``output_mode`` is passed to the
+    stream writer (an aggregate re-emitted in "update" mode)."""
     from ..relation import RelationType
 
     target = engine.relation(table_name, RelationType.Table)
@@ -641,9 +600,11 @@ def _start_sketch_maintenance(engine, stream: DataFrame, table_name: str,
                        build(batch_df))
         engine.overwrite_table_atomic(target, merged)
 
+    writer = stream.writeStream.foreachBatch(upsert)
+    if output_mode:
+        writer = writer.outputMode(output_mode)
     return (
-        stream.writeStream.foreachBatch(upsert)
-        .trigger(availableNow=True)
+        writer.trigger(availableNow=True)
         .option("checkpointLocation",
                 f"{engine.warehouse_dir}/_checkpoints/{table_name}")
         .start()
@@ -677,7 +638,7 @@ def streaming_bloom_maintenance(
     Returns the StreamingQuery (availableNow — callers await it)."""
     from ..extensions.sketch import bloom_build, bloom_union
 
-    return _start_sketch_maintenance(
+    return _start_upsert_sink(
         engine, stream, table_name,
         build=lambda df: bloom_build(df, item_col, group_cols,
                                      m_bits=m_bits, n_hashes=n_hashes),
@@ -716,7 +677,7 @@ def streaming_priority_sample_maintenance(
     Returns the StreamingQuery (availableNow — callers await it)."""
     from ..extensions.sampling import priority_state, priority_state_merge
 
-    return _start_sketch_maintenance(
+    return _start_upsert_sink(
         engine, stream, table_name,
         build=lambda df: priority_state(df, id_col, weight_col, k=k,
                                         group_cols=group_cols),
@@ -751,7 +712,7 @@ def streaming_gram_maintenance(
     Returns the StreamingQuery (availableNow — callers await it)."""
     from ..extensions.similarity import gram_state, gram_state_merge
 
-    return _start_sketch_maintenance(
+    return _start_upsert_sink(
         engine, stream, table_name,
         build=lambda df: gram_state(df, vec_col, scale=scale),
         merge=lambda tbl, st: gram_state_merge(tbl.unionByName(st)))
@@ -1140,7 +1101,7 @@ def streaming_ams_maintenance(
     Returns the StreamingQuery (availableNow — callers await it)."""
     from ..extensions.sketch import ams_build, ams_merge
 
-    return _start_sketch_maintenance(
+    return _start_upsert_sink(
         engine, stream, table_name,
         build=lambda df: ams_build(df, item_col, group_cols, r=r),
         merge=lambda tbl, sk: ams_merge(tbl.unionByName(sk), group_cols))

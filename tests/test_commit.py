@@ -1,4 +1,4 @@
-"""The commit primitives: Engine.swap_in (stage -> rename -> re-point
+"""The commit primitives: CatalogClient.swap_in (stage -> rename -> re-point
 partitions -> drop backup) and merge.dynamic_overwrite_insert.
 
 Partitioned tables are the case that matters: Spark's ALTER TABLE ...
@@ -192,12 +192,28 @@ def test_swap_fault_leaves_old_or_new_rows(engine, monkeypatch, fault,
     assert _rows(engine, "ft") == new and _leftovers(engine) == []
 
 
-def test_rebuild_describes_target_once(engine, monkeypatch):
-    """One overwrite describes the target for its layout and the stage for
+_REBUILDS = {
+    "overwrite": ({"materialized": "table", "partition_by": ["p"]},
+                  lambda engine, cfg: engine.overwrite_table_atomic(
+                      engine.relation("described"),
+                      engine.sql("SELECT id, id % 3 AS p FROM range(12)"))),
+    # the row-rewrite commit reads the layout once and hands it to the swap
+    "delete_insert": ({"materialized": "incremental",
+                       "incremental_strategy": "delete+insert",
+                       "unique_key": "id"},
+                      lambda engine, cfg: engine.materialize(Model(
+                          "described", config=cfg,
+                          sql="SELECT id, id % 3 AS p FROM range(12)"))),
+}
+
+
+@pytest.mark.parametrize("rebuild", sorted(_REBUILDS))
+def test_rebuild_describes_target_once(engine, monkeypatch, rebuild):
+    """One rebuild describes the target for its layout and the stage for
     its partitioning: two DESCRIBE ... AS JSON calls, not three."""
     from dbt_extrica_spark.catalog import CatalogClient
 
-    cfg = {"materialized": "table", "partition_by": ["p"]}
+    cfg, run = _REBUILDS[rebuild]
     engine.materialize(Model("described", config=cfg, sql=(
         "SELECT id, id % 3 AS p FROM range(9)")))
     seen = []
@@ -208,9 +224,7 @@ def test_rebuild_describes_target_once(engine, monkeypatch):
         return real(self, relation)
 
     monkeypatch.setattr(CatalogClient, "describe_table", counting)
-    engine.overwrite_table_atomic(
-        engine.relation("described"),
-        engine.sql("SELECT id, id % 3 AS p FROM range(12)"))
+    run(engine, cfg)
     assert len(seen) == 2 and seen[0] == "described"
     assert re.search(r"__stg_[0-9a-f]+$", seen[1])
     assert len(_rows(engine, "described")) == 12
@@ -228,7 +242,7 @@ def test_swap_fault_at_stage_build_keeps_old_table(engine):
         raise RuntimeError("injected fault")
 
     with pytest.raises(RuntimeError, match="injected fault"):
-        engine.swap_in(target, half_built)
+        engine.catalog.swap_in(target, half_built)
     assert _rows(engine, "fs") == {(i,) for i in range(5)}
     assert _leftovers(engine) == []
 

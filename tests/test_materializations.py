@@ -531,6 +531,67 @@ def test_partition_scoped_delete_insert_empties_partition(engine):
     assert _partitions(engine, "pdiempty") == ["part=B"]
 
 
+_NULL_PART_BASES = {
+    # (3, 30, NULL) survives the delete of key 1: the NULL partition is
+    # rewritten without key 1, not left holding it
+    "null_partition_keeps_rows": (
+        "(1, 10, CAST(NULL AS STRING)), (3, 30, NULL), (2, 20, 'B')",
+        {(1, 11, "B"), (2, 20, "B"), (3, 30, None)},
+        ["part=B", "part=__HIVE_DEFAULT_PARTITION__"]),
+    # key 1 was the NULL partition's only row: the partition is dropped
+    "null_partition_emptied": (
+        "(1, 10, CAST(NULL AS STRING)), (2, 20, 'B')",
+        {(1, 11, "B"), (2, 20, "B")},
+        ["part=B"]),
+}
+
+
+@pytest.mark.parametrize("strategy", ["delete+insert", "merge"])
+@pytest.mark.parametrize("case", sorted(_NULL_PART_BASES))
+def test_partition_scoped_null_partition(engine, strategy, case):
+    base, want, parts = _NULL_PART_BASES[case]
+    cfg = {"materialized": "incremental", "incremental_strategy": strategy,
+           "unique_key": "k", "partition_by": ["part"]}
+    _inc(engine, "pnull",
+         f"SELECT * FROM VALUES {base} AS t(k, v, part)", cfg)
+    _inc(engine, "pnull",
+         "SELECT * FROM VALUES (1, 11, 'B') AS t(k, v, part)", cfg)
+    assert {(r.k, r.v, r.part) for r in engine.table("pnull").collect()} \
+        == want
+    assert _partitions(engine, "pnull") == parts
+
+
+_GAINS_PARTITION_BY = {
+    # built unpartitioned, then run with partition_by: the table keeps its
+    # layout, so the run is an ordinary swap of the whole table
+    "merge": ({"materialized": "incremental",
+               "incremental_strategy": "merge", "unique_key": "k"},
+              "(1, 11, 'B'), (3, 30, 'C')",
+              {(1, 11, "B", True), (2, 20, "B", True), (3, 30, "C", True)}),
+    "snapshot": ({"materialized": "snapshot", "strategy": "check",
+                  "unique_key": "k", "check_cols": ["v"],
+                  "snapshot_time": "2024-01-01 00:00:00"},
+                 "(1, 11, 'A'), (2, 20, 'B')",
+                 {(1, 10, "A", False), (1, 11, "A", True),
+                  (2, 20, "B", True)}),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_GAINS_PARTITION_BY))
+def test_model_gaining_partition_by_keeps_rows(engine, kind):
+    cfg, batch, want = _GAINS_PARTITION_BY[kind]
+    engine.materialize(Model("gains", config=cfg, sql=(
+        "SELECT * FROM VALUES (1, 10, 'A'), (2, 20, 'B') AS t(k, v, part)")))
+    cfg = {**cfg, "partition_by": ["part"]}
+    engine.materialize(Model("gains", config=cfg, sql=(
+        f"SELECT * FROM VALUES {batch} AS t(k, v, part)")))
+    rows = engine.table("gains").collect()
+    assert {(r.k, r.v, r.part, r.asDict().get("dbt_valid_to") is None)
+            for r in rows} == want
+    assert not engine.catalog.describe_table(
+        engine.relation("gains")).get("partition_columns")
+
+
 @pytest.fixture()
 def non_utc_process(monkeypatch):
     """The Python process in a time zone behind UTC, as on a host outside
@@ -695,32 +756,56 @@ def test_range_join_matches_nested_loop(engine):
     assert g == e
 
 
-def test_rollup_lateness_folds_late_rows(engine):
+_ROLLUP_LATENESS = {
+    # phase 2 adds a LATE row in the Jan-2 bucket and a new Jan-3 row;
+    # Jan-2 (within lateness of wm=Jan-2) is refolded with the late row,
+    # Jan-3 appears, Jan-1 is untouched
+    "day": ([("2024-01-01 10:00:00", 1.0), ("2024-01-02 10:00:00", 2.0)],
+            [("2024-01-02 23:00:00", 10.0), ("2024-01-03 01:00:00", 5.0)],
+            {"2024-01-01": (1, 1.0), "2024-01-02": (2, 12.0),
+             "2024-01-03": (1, 5.0)}),
+    # the floor is one MONTH before wm=Mar-1: February is recomputed from
+    # all its rows (a floor one day back, Feb-29, would rebuild it from
+    # one day of rows), the late Feb-20 row folds in, January is untouched
+    "month": ([("2024-01-15 10:00:00", 1.0), ("2024-02-03 10:00:00", 2.0),
+               ("2024-02-10 10:00:00", 3.0), ("2024-02-29 10:00:00", 4.0),
+               ("2024-03-02 10:00:00", 5.0)],
+              [("2024-02-20 10:00:00", 10.0), ("2024-03-05 10:00:00", 6.0)],
+              {"2024-01-01": (1, 1.0), "2024-02-01": (4, 19.0),
+               "2024-03-01": (2, 11.0)}),
+}
+
+
+@pytest.mark.parametrize("bucket", sorted(_ROLLUP_LATENESS))
+def test_rollup_lateness_folds_late_rows(engine, bucket):
     from dbt_extrica_spark.operators.rollup import continuous_rollup
 
     spark = engine.spark
-    spark.sql("SELECT * FROM VALUES"
-              " (TIMESTAMP '2024-01-01 10:00:00', 1.0),"
-              " (TIMESTAMP '2024-01-02 10:00:00', 2.0)"
-              " AS t(ts, v)").createOrReplaceTempView("roll_src1")
-    # phase 2 adds a LATE row in the Jan-2 bucket and a new Jan-3 row
-    spark.sql("SELECT * FROM VALUES"
-              " (TIMESTAMP '2024-01-01 10:00:00', 1.0),"
-              " (TIMESTAMP '2024-01-02 10:00:00', 2.0),"
-              " (TIMESTAMP '2024-01-02 23:00:00', 10.0),"
-              " (TIMESTAMP '2024-01-03 01:00:00', 5.0)"
-              " AS t(ts, v)").createOrReplaceTempView("roll_src2")
+    first, late, want = _ROLLUP_LATENESS[bucket]
+
+    def values(rows):
+        return ("SELECT * FROM VALUES " + ", ".join(
+            f"(TIMESTAMP '{ts}', {v})" for ts, v in rows) + " AS t(ts, v)")
+
+    spark.sql(values(first)).createOrReplaceTempView("roll_src1")
+    spark.sql(values(first + late)).createOrReplaceTempView("roll_src2")
     aggs = {"n": "CAST(COUNT(*) AS BIGINT)",
             "s": "CAST(SUM(CAST(v AS DECIMAL(18,4))) AS DOUBLE)"}
-    continuous_rollup(engine, "roll_t", "roll_src1", "ts", "day", aggs=aggs)
-    continuous_rollup(engine, "roll_t", "roll_src2", "ts", "day", aggs=aggs,
-                      lateness_buckets=1)
+    continuous_rollup(engine, "roll_t", "roll_src1", "ts", bucket,
+                      aggs=aggs)
+    continuous_rollup(engine, "roll_t", "roll_src2", "ts", bucket,
+                      aggs=aggs, lateness_buckets=1)
     rows = {str(r.bucket): (r.n, r.s) for r in
             engine.table("roll_t").collect()}
-    # Jan-2 (within lateness of wm=Jan-2) refolded with the late row;
-    # Jan-3 appears; Jan-1 untouched
-    assert rows == {"2024-01-01": (1, 1.0), "2024-01-02": (2, 12.0),
-                    "2024-01-03": (1, 5.0)}
+    assert rows == want
+
+
+def test_rollup_rejects_bucket_it_cannot_floor(engine):
+    # an "hour" rollup would build DATE (day) buckets under an hour name
+    from dbt_extrica_spark.operators.rollup import continuous_rollup
+
+    with pytest.raises(ValueError, match="unsupported rollup bucket"):
+        continuous_rollup(engine, "roll_h", "roll_src_h", "ts", "hour")
 
 
 def test_rollup_cascade_reaggregates_from_finer_level(engine):
@@ -1075,11 +1160,11 @@ def test_microbatch_per_batch_retry(engine, monkeypatch):
     real = engine.overwrite_table_atomic
     calls = {"n": 0}
 
-    def flaky(target, df):
+    def flaky(target, df, **kw):
         calls["n"] += 1
         if calls["n"] == 1:
             raise RuntimeError("transient executor loss")
-        return real(target, df)
+        return real(target, df, **kw)
 
     monkeypatch.setattr(engine, "overwrite_table_atomic", flaky)
     engine.materialize(Model("mbr", sql=mk(200), config=cfg))

@@ -25,7 +25,7 @@ def warm2(fn) -> float:
     graph_triangles hunt: fresh-session same-code walls 39.3 / 20.9 /
     20.5s with ONE distinct post-AQE plan fingerprint and bit-identical
     counts — the spread was entirely first-run warmup, not plan
-    variance; tools/triangles_hunt.py). Running each side twice and
+    variance). Running each side twice and
     keeping the faster wall measures both sides at their reproducible
     warm floor, so the ratio is warm/warm every run regardless of
     session history — the fix the verdict asked for instead of a third
@@ -648,8 +648,8 @@ def main() -> None:
         #                         instability was pinned to first-run
         #                         JIT/page-cache transients (identical
         #                         post-AQE plan fingerprints and counts
-        #                         across fresh-session trials,
-        #                         tools/triangles_hunt.py); warm2 floors
+        #                         across fresh-session trials);
+        #                         warm2 floors
         #                         it at 19-22s and the ORIGINAL ceiling
         #                         holds (measured 4.69 on a loaded host)
         "kmeans": 3.5,          # linear scans; x1 carries fixed overhead
